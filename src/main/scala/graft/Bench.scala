@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (reference analogue: PureJavaTest.java:12-21 /
   * TruffleTest.java:17-27 — 1000 warm iterations there; here a cold pass
@@ -136,38 +135,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     if (maybeReexec(args)) return
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor = cores/4 (r19, measured): the advisory-
-      // size coalescer collapses every small shuffle to ONE partition,
-      // so each CPU-heavy post-shuffle stage (interpreted variant
-      // consumers, HOF projections above a terminal sort) ran
-      // single-core while 31 cores idled — variant_explode 2.7 → 1.2 s,
-      // win_running 1.0 → 0.5 s in the same window. The floor is
-      // DERIVED (a quarter of session parallelism, min 2), not a tuned
-      // constant: at production volumes byte-targeted partition counts
-      // sit far above core count and the floor never binds; it binds
-      // exactly in the small-shuffle regime where partitions are
-      // compute-bound, not byte-bound. A quarter rather than all cores
-      // because the floor also taxes every genuinely tiny stage with
-      // task overhead — the 4-arm A/B (floor 1/8/16/32 over a mixed
-      // 22-key sample, same window) read 19.4 / 15.8 / 16.7 / 16.3 s:
-      // cores/4 keeps ~all of the heavy-stage win at a quarter of the
-      // overhead. Env override for A/Bs; the driver takes the default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED",
-          math.max(2, cpus.toInt / 4).toString))
-      // Let AQE re-plan (and coalesce) shuffles above cached plans too —
-      // the iterative CC loop's per-round joins read persisted frames,
-      // which this conf otherwise pins at the static partition count.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     // ERROR, not WARN: the driver's 2000-char tail window is the bench's
     // delivery channel, and stderr WARN spam (benign LogicalRDD plan-
     // rename warnings, several per sql_recursive_cte execution) is what

@@ -105,7 +105,15 @@ object Tables {
         // 100 TB contract promises a no-op. listFiles(p, true) is a lazy
         // RemoteIterator, and the loop below stops at the first `want`
         // row groups, so a 10k-file table still costs a handful of
-        // footer reads.
+        // footer reads. Paths with a component below the root that
+        // starts with `_` or `.` (an in-progress `_temporary/` write,
+        // Hadoop's hidden-file convention) are skipped, as Spark's own
+        // scan skips them.
+        val rootDepth = fs.makeQualified(p).depth()
+        def hidden(f: Path): Boolean =
+          Iterator.iterate(f)(_.getParent)
+            .takeWhile(q => q != null && q.depth() > rootDepth)
+            .exists(q => q.getName.startsWith("_") || q.getName.startsWith("."))
         val files: Iterator[Path] =
           if (fs.getFileStatus(p).isDirectory) {
             val remote = fs.listFiles(p, true)
@@ -113,7 +121,8 @@ object Tables {
               def hasNext: Boolean = remote.hasNext
               def next(): org.apache.hadoop.fs.LocatedFileStatus =
                 remote.next()
-            }.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+            }.map(_.getPath)
+              .filter(f => f.getName.endsWith(".parquet") && !hidden(f))
           } else Iterator(p)
         var groups = 0
         while (groups < want && files.hasNext) {

@@ -132,10 +132,9 @@ object Dedup {
     // A cross-shingle hash collision (≈n²/2⁶⁵, ~1e-8 at sf0.1) would
     // perturb one intersection count — accepted odds for halving
     // shuffle volume.
-    // (A df>=2 posting-list prefilter before the self-join —
-    // [[ngramPairsPrefiltered]] — was HYPOTHESIZED to win on a
-    // mostly-unique-shingle web corpus. The A/B (graft.operators
-    // .NgramAb, SCALING.md §"dedup_ngram posting-list A/B") measured
+    // (A df>=2 posting-list prefilter before the self-join was
+    // HYPOTHESIZED to win on a mostly-unique-shingle web corpus. The
+    // A/B (SCALING.md §"dedup_ngram posting-list A/B") measured
     // it 1.4–2.3× SLOWER on BOTH corpus shapes at 50k and 200k docs,
     // df1 share up to 0.96: pruning df=1 postings saves join input
     // whose join output was already zero, while paying an extra
@@ -150,31 +149,13 @@ object Dedup {
   }
 
   /** Posting self-join → per-pair intersection counts; ONE definition
-    * shared by [[ngramPairs]] and [[ngramPairsPrefiltered]] so their
-    * DedupSpec-pinned equivalence cannot drift on the pairing logic. */
+    * shared by [[ngramPairs]] and [[containmentPairs]]. */
   private def pairIntersections(posts: DataFrame): DataFrame =
     posts.select(col("doc_id").as("doc_a"), col("h"))
       .join(posts.select(col("doc_id").as("doc_b"), col("h")), Seq("h"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("c"))
-
-  /** The df≥2 posting-list prefilter variant of [[ngramPairs]]: drop
-    * every shingle that occurs in exactly one document BEFORE the
-    * self-join — a df=1 shingle can never contribute to an
-    * intersection, so the output is IDENTICAL (DedupSpec pins it).
-    * Worth it only when most shingles are unique (real web corpora);
-    * on the high-overlap fixture vocabulary the pruning aggregation
-    * costs more than it saves. Numbers for both shapes: SCALING.md. */
-  private[operators] def ngramPairsPrefiltered(docs: DataFrame,
-      minJ: Double = 0.8): DataFrame = {
-    val sh  = hashedShingles(docs)
-    val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val shared = sh.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") >= 2).select("h")
-    val posts = sh.join(shared, Seq("h"), "left_semi")
-    jaccardFilter(pairIntersections(posts), cnt, minJ)
-  }
 
   /** Shared verify tail of both near-dup pipelines: given intersection
     * counts (doc_a, doc_b, c) and per-doc shingle totals (doc_id, n),
@@ -283,7 +264,8 @@ object Dedup {
     minhashPairs(Tables.fannedDocuments(spark, dir))
 
   /** Checkpointed LEAF view of [[minhashPairs]] over the corpus,
-    * memoized per dir (r19, measured with KeyProbe on graph_pagerank):
+    * memoized per dir (r19, measured on graph_pagerank — SCALING.md
+    * §"r19 driver-planning cuts"):
     * every DOWNSTREAM consumer of the pair frame re-analyzed and
     * re-canonicalized the whole LSH subtree (32 minhash aggregates,
     * self-join, verify joins) on each reference — ~1.1 s of pure

@@ -46,13 +46,14 @@ object Graph {
   // conserved and no dangling-node term is needed.
   def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // PLAN-LEAF entry (r19, measured with KeyProbe): the warm key spent
-    // 1.1 s of a 1.7 s pass in DRIVER planning — every reference to the
-    // pair frame re-analyzed and re-canonicalized the whole LSH subtree
-    // (32 minhash aggregates + self-join + verify joins) against the
-    // cache. The pair frame is O(duplication) tiny (~25 rows at sf0.1),
-    // so materialize it ONCE as a LogicalRDD leaf: the LSH tree is
-    // planned once, and the loop's plans stay leaf-sized. The persisted
+    // PLAN-LEAF entry (r19, SCALING.md §"r19 driver-planning cuts"):
+    // the warm key spent 1.1 s of a 1.7 s pass in DRIVER planning —
+    // every reference to the pair frame re-analyzed and re-canonicalized
+    // the whole LSH subtree (32 minhash aggregates + self-join + verify
+    // joins) against the cache. The pair frame is O(duplication) tiny
+    // (~25 rows at sf0.1), so materialize it ONCE as a LogicalRDD leaf:
+    // the LSH tree is planned once, and the loop's plans stay
+    // leaf-sized. The persisted
     // minhashPairs frame still backs the checkpoint's one executing
     // scan, so warm passes don't re-run the LSH build either.
     val pairs = Dedup.pairsLeaf(spark, dir)

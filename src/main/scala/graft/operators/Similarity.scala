@@ -461,13 +461,15 @@ object Similarity {
   // DROPPED dimensions >= 1024 on the inner join for wider models
   // (1536/3072-dim). One bounded 1-row driver scalar (max array size)
   // per dir derives the true bound; like the r19 corpus-count memo it
-  // caches metadata, never data.
+  // caches metadata, never data. An empty table has no max: 0 dims,
+  // so the sign table and the result are empty.
   private val rpDimsMemo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def rpDims(spark: SparkSession, dir: String): Long =
     rpDimsMemo.getOrElseUpdate((spark, dir),
       Tables.embeddings(spark, dir)
-        .select(max(size(col("embedding")))).head().getInt(0).toLong)
+        .select(coalesce(max(size(col("embedding"))), lit(0)))
+        .head().getInt(0).toLong)
 
   def embedRp(spark: SparkSession, dir: String): DataFrame = {
     // s(i,j): -1 iff the first hex digit of md5("i:j") is odd — the
@@ -733,13 +735,13 @@ object Similarity {
   //
   // 100 TB shape: candidate volume is linear in n — n·4k² pairs/round
   // worst case, cut by the incremental rule (only pairs with a fresh
-  // endpoint). Dong et al.'s ρ-SAMPLING refinement is implemented in
+  // endpoint). Dong et al.'s ρ-SAMPLING refinement was implemented in
   // full (per-direction pending flags, sampled new'×(new'∪old') pair
-  // rule — the nndRhoFor dial) and was MEASURED AGAINST at mult-100:
+  // rule) and MEASURED AGAINST at mult-100:
   // on this overlap-starved corpus the volume is either conserved
   // (new-side-only ρ: −7 % total) or bought with recall (paper rule:
-  // 0.94 → 0.69) — the three-arm A/B is in VERIFY_sf1.md r18, and the
-  // default stays ρ=1 (bit-identical trajectory to r17). Every
+  // 0.94 → 0.69) — the three-arm A/B is in VERIFY_sf1.md r18, so the
+  // build runs ρ=1 (bit-identical trajectory to r17). Every
   // stage is a bounded hash join or a single-exchange agg — no
   // sequential insert order, no driver state beyond the init modulus.
   // At 1B vectors this is how production builds the graph (NN-Descent/
@@ -761,15 +763,9 @@ object Similarity {
     * in k (Dong et al.'s observation, already used at r15 to fix the
     * 0.66 plateau at degree 10), so the degree scales with log10(n)
     * past the converged-at-20k scale. Per-round candidate volume grows
-    * ~k² — the cost lands on the one-time committed build.
-    * GRAFT_NND_K overrides for experiments (folded into the index
-    * fingerprint, same contract as GRAFT_NND_CAP). */
+    * ~k² — the cost lands on the one-time committed build. */
   private def graphKFor(n: Long): Int =
-    sys.env.get("GRAFT_NND_K").map(_.toInt).getOrElse(
-      GraphK + 12 * math.max(0,
-        (math.log10(n.toDouble / 20000.0)).ceil.toInt))
-  private def nndKTag: String =
-    sys.env.get("GRAFT_NND_K").map(k => s":kenv=$k").getOrElse("")
+    GraphK + 12 * math.max(0, (math.log10(n.toDouble / 20000.0)).ceil.toInt)
 
   /** Convergence-round CAP as a function of corpus size — the r16
     * mult-100 lesson, taken to its conclusion (VERDICT r16 item 1):
@@ -778,44 +774,9 @@ object Similarity {
     * 12, fresh-count still above the δ target). The cap scales with
     * log(n): one extra "decade allowance" of rounds per 10× corpus
     * growth past the bench scale, so the δ-convergence criterion — not
-    * the cap — is what normally terminates the build. Experiments can
-    * override via GRAFT_NND_CAP (the override is folded into the index
-    * fingerprint so a committed experiment never serves silently as
-    * production). */
+    * the cap — is what normally terminates the build. */
   private def nndRoundCapFor(n: Long): Int =
-    sys.env.get("GRAFT_NND_CAP").map(_.toInt).getOrElse(
-      NndMaxRounds + 8 * math.max(0,
-        (math.log10(n.toDouble / 2000.0)).ceil.toInt))
-  private def nndCapTag: String =
-    sys.env.get("GRAFT_NND_CAP").map(c => s":capenv=$c").getOrElse("")
-
-  /** ρ-sampling rate (×1000) — Dong et al.'s incremental-search cost
-    * lever (WWW 2011 §2.3), implemented in full in r18 (VERDICT r17
-    * item 3: per-direction pending flags, sampled new' × (new' ∪
-    * old') pair rule, δ scaled by ρ) and then MEASURED AGAINST at
-    * mult-100, where it lost the adjudication — default stays ρ=1:
-    *
-    *   ρ=1 (control, degree 32, 200k): 1016 M candidates, 10 rounds,
-    *     recall 0.94;
-    *   ρ=0.5 new-side only: peak round 376→282 M (−25 %) but TOTAL
-    *     940 M (−7 % — volume deferred, not cut), 18 rounds, 0.92;
-    *   ρ=0.5 both-endpoints (the paper's rule, ρ² flood cut): round-1
-    *     376→94 M and total ~420 M, but recall COLLAPSES to 0.69 by
-    *     plateau (26 rounds).
-    *
-    * The same overlap starvation that rules out LSH on this corpus
-    * (dedup_embedding note) and forced the degree scale dial (r17)
-    * makes gossip volume load-bearing: you pay the k² or you pay it
-    * in recall. Full traces in VERIFY_sf1.md r18. The machinery stays
-    * (deterministic per-(pivot, member, round) xxhash64 Bernoulli —
-    * no RNG state; at ρ=1 it is provably inert and the trajectory is
-    * bit-identical to r17's) as an experiment dial: GRAFT_NND_RHO
-    * (×1000, e.g. 500), folded into the index fingerprint like the
-    * other dials so a committed experiment never serves silently. */
-  private def nndRhoFor(n: Long): Int =
-    sys.env.get("GRAFT_NND_RHO").map(_.toInt).getOrElse(1000)
-  private def nndRhoTag: String =
-    sys.env.get("GRAFT_NND_RHO").map(r => s":rhoenv=$r").getOrElse("")
+    NndMaxRounds + 8 * math.max(0, (math.log10(n.toDouble / 2000.0)).ceil.toInt)
 
   // The graph as a COMMITTED index (VERDICT r15 item 3): the first
   // build per (corpus, params) runs NN-Descent, commits the result as
@@ -836,9 +797,11 @@ object Similarity {
   private val graphMemo =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   Caches.onRelease(() => graphMemo.clear())
+  // The params keep the r18 ρ-sampling tags (`rho=1.0`, `oldsamp`,
+  // `conv=1e-3xrho`): the build runs at ρ=1 (the NN-Descent note above),
+  // and unchanged strings keep committed indexes valid.
   private def knnParams =
-    s"knng.v10:kfn=log12:conv=1e-3xrho:dirflags:oldsamp:capfn=log8:rho=1.0:init=ivfhalf(ivf.v1)" +
-      s"$nndCapTag$nndKTag$nndRhoTag"
+    "knng.v10:kfn=log12:conv=1e-3xrho:dirflags:oldsamp:capfn=log8:rho=1.0:init=ivfhalf(ivf.v1)"
   private[operators] def knnGraph(spark: SparkSession, dir: String): DataFrame =
     graphMemo.getOrElseUpdate(dir, {
       val fp = AnnIndexStore.fingerprint(spark, dir, knnParams)
@@ -888,8 +851,7 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   Caches.onRelease(() => refreshMemo.clear())
   private def refreshParams =
-    s"knngref.v8:kfn=log12:conv=1e-3xrho:dirflags:oldsamp:capfn=log8:split=0.9:rho=1.0" +
-      s"$nndCapTag$nndKTag$nndRhoTag"
+    "knngref.v8:kfn=log12:conv=1e-3xrho:dirflags:oldsamp:capfn=log8:split=0.9:rho=1.0"
   private[operators] def refreshedGraph(spark: SparkSession,
       dir: String): DataFrame =
     refreshMemo.getOrElseUpdate(dir, {
@@ -1123,13 +1085,9 @@ object Similarity {
         pmod(conv(substring(md5(concat(lit("nnd:"), col("v"), lit(":"),
           col("i"))), 1, 12), 16, 10).cast("long"), lit(n)).as("w"))
     val initPairs = seedDir match {
-      // halfK >= 1 guard (ADVICE r18): at kDeg = 1 (the GRAFT_NND_K
-      // experiment dial's floor) halfK = 0 and the seeded branch would
-      // explode sequence(0, -1) — which Spark evaluates as the
-      // DESCENDING array [0, -1], i.e. two unintended seeded picks per
-      // vertex instead of zero. Degenerate degrees fall back to pure
-      // random init (randFrom = halfK = 0 covers the full range).
-      case Some(d) if halfK >= 1 =>
+      // kDeg ≥ GraphK = 20, so halfK ≥ 10 and sequence(0, halfK - 1)
+      // never runs descending
+      case Some(d) =>
         val listed = ivfIndex(spark, d)._2
           .select(col("vec_id"), col("list_id"))
         val listArr = broadcast(listed.groupBy("list_id")
@@ -1142,7 +1100,7 @@ object Similarity {
                 (pmod(xxhash64(lit("nndseed"), col("vec_id"), i),
                   size(col("members"))) + 1).cast("int")))).as("w"))
         seeded.unionByName(randomInit)
-      case _ => randomInit
+      case None => randomInit
     }
     val freshInit = initPairs
       .filter(col("v") =!= col("w")).distinct()
@@ -1160,18 +1118,13 @@ object Similarity {
           lit(false).as("freshF"), lit(false).as("freshR"),
           lit(false).as("isNew")))
     }
-    // Edge flags (reworked for ρ-sampling, r18): novelty is tracked
-    // PER DIRECTION — `freshF` = this edge has not yet gossiped in v's
-    // neighborhood, `freshR` = not yet in w's. The first ρ cut cleared
-    // one flag for both directions (sampled at either pivot → edge
-    // spent), and the mult-100 trace showed why that loses recall: an
-    // edge sampled at v but not at w never mixes into w's neighborhood
-    // at all, and the build plateaus at 0.89 vs full gossip's 0.94.
-    // With per-direction flags every edge still gossips in BOTH
-    // neighborhoods eventually — sampling only SPREADS the k² over
-    // rounds. `isNew` = first entered the graph THIS round (the
-    // paper's update counter — what the δ-convergence criterion
-    // meters; before ρ-sampling the flags coincided).
+    // Edge flags (r18): novelty is tracked PER DIRECTION — `freshF` =
+    // this edge has not yet gossiped in v's neighborhood, `freshR` = not
+    // yet in w's. `isNew` = first entered the graph THIS round (the
+    // paper's update counter — what the δ-convergence criterion meters).
+    // At ρ=1 every membership gossips the round it is fresh, so the
+    // three flags coincide; they stay separate columns so the round
+    // frames keep the schema the committed builds were made with.
     // merge → dedupe → top-k in ONE exchange: hash partitioning on v
     // satisfies both the (v,w) and the (v) clustering, so the pair-level
     // max/min agg and the per-vertex array cap share the repartition
@@ -1216,70 +1169,13 @@ object Similarity {
     // trajectory is deterministic, so the stopping round is a pure
     // function of the corpus — cross-run/cross-topology identity holds.
     // Cost lands only on the one-time committed BUILD, never on serves.
-    // δ scales with ρ (r18, measured at mult-100): sampled gossip
-    // throttles per-round updates by ~ρ, so an un-scaled δ fires while
-    // the lingering unsampled tail is still productive — the ρ=0.5
-    // build converged at round 12 with recall 0.89 (still climbing
-    // +0.03/round) against the full build's 0.94. δ·ρ keeps the
-    // criterion "updates per unit of gossip actually attempted",
-    // letting the cheap tail rounds (~15 s vs round 1's 280 s at 200k)
-    // finish the mixing the early-round sampling deferred.
-    val rho1000 = nndRhoFor(n)
-    val convergeTarget =
-      math.max(1L, (n * kDeg) / 1000 * rho1000 / 1000) // δ = 0.001·ρ
+    val convergeTarget = math.max(1L, (n * kDeg) / 1000) // δ = 0.001
     val roundCap = nndRoundCapFor(n)
-    // GRAFT_NND_TRACE: per-round probe recall@10 vs brute force — the
-    // tuning instrument behind the scale-envelope numbers in
-    // VERIFY_sf1.md. Driver-side truth is 10 probes × K ids (bounded).
-    val traceTruth: Option[Map[Long, Set[Long]]] =
-      if (!sys.env.contains("GRAFT_NND_TRACE")) None else Some {
-        val probes = broadcast(emb.filter(col("vec_id") < NProbes)
-          .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
-        val wt = Window.partitionBy("probe_id")
-          .orderBy(col("cos").desc, col("cand_id"))
-        emb.join(probes, col("probe_id") =!= col("vec_id"))
-          .select(col("probe_id"), col("vec_id").as("cand_id"),
-            round(graft.functions.CosineSim.cosineSim(col("pe"),
-              col("embedding")), 4).as("cos"))
-          .withColumn("rn", row_number().over(wt)).filter(col("rn") <= K)
-          .select("probe_id", "cand_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (p, rows) => p -> rows.map(_.getLong(1)).toSet }
-      }
-    def traceRound(roundNo: Int, fresh: Long, cand: Long,
-        secs: Double): Unit =
-      traceTruth.foreach { truth =>
-        val wt = Window.partitionBy("v").orderBy(col("cos").desc, col("w"))
-        val got = graph.filter(col("v") < NProbes)
-          .withColumn("rn", row_number().over(wt)).filter(col("rn") <= K)
-          .select("v", "w").collect()
-          .groupBy(_.getLong(0))
-          .map { case (p, rows) => p -> rows.map(_.getLong(1)).toSet }
-        val hits = truth.map { case (p, t) =>
-          (t & got.getOrElse(p, Set.empty)).size }.sum
-        val rec = hits.toDouble / truth.map(_._2.size).sum
-        println(f"[nnd-trace] label=$label round=$roundNo fresh=$fresh " +
-          f"cand=$cand recall=$rec%.3f secs=$secs%.1f")
-      }
     var roundNo = 0
     var work = 0L
     var freshCount = Long.MaxValue
     while (roundNo < roundCap && freshCount > convergeTarget) {
       roundNo += 1
-      // ρ-sample membership: a deterministic per-(pivot, member, round)
-      // Bernoulli — which fresh memberships gossip THIS round. A pure
-      // function of the trajectory (xxhash64, no RNG state), recomputed
-      // identically where the sampled edge's fresh flag is cleared.
-      def sampled(pivot: Column, member: Column): Column =
-        pmod(xxhash64(lit("nndrho"), pivot, member, lit(roundNo)),
-          lit(1000)) < lit(rho1000)
-      // independent ρ-sample of the OLD side (the paper's old' — Dong
-      // et al. sample BOTH operand sets, new' × (new' ∪ old'), which
-      // is what cuts the per-round flood by ρ² instead of ρ; old
-      // memberships re-draw every round, no flag bookkeeping)
-      def sampledOld(pivot: Column, member: Column): Column =
-        pmod(xxhash64(lit("nndrho2"), pivot, member, lit(roundNo)),
-          lit(1000)) < lit(rho1000)
       // symmetrized adjacency with carried member embeddings, capped at
       // 2k per pivot by score inside the agg (the reverse-sample ρ)
       // mutual edges appear in both directions — dedupe by (v,w) before
@@ -1288,9 +1184,7 @@ object Similarity {
       // repartition(v) lets the (v,w) dedupe and the per-pivot collect
       // share one exchange; each direction row carries ITS OWN pending
       // flag (freshF forward, freshR reversed), max-merged per
-      // membership (bool OR over contributing directions), and the
-      // membership GOSSIPS this round iff additionally ρ-sampled
-      // (`use` — no new stage, just a projected flag)
+      // membership (bool OR over contributing directions)
       val adj = graph.select(col("v"), col("w"), col("cos"),
           col("freshF").as("fresh"))
         .union(graph.select(col("w").as("v"), col("v").as("w"),
@@ -1300,43 +1194,31 @@ object Similarity {
         .groupBy(col("v"), col("w"))
         .agg(max(col("cos")).as("cos"), max(col("fresh")).as("fresh"),
           first(col("ew")).as("ew"))
-        .withColumn("useNew", col("fresh") && sampled(col("v"), col("w")))
-        .withColumn("useOld",
-          !col("fresh") && sampledOld(col("v"), col("w")))
         .groupBy(col("v"))
         .agg(slice(array_sort(
-          collect_list(struct(col("cos"), col("w"),
-            col("useNew"), col("useOld"), col("ew"))),
+          collect_list(struct(col("cos"), col("w"), col("fresh"), col("ew"))),
           byCosDesc), 1, 2 * kDeg).as("members"))
       // each unordered neighbor pair once via positional explode; score
       // in place over the carried vectors; the incremental rule is the
-      // paper's new' × (new' ∪ old'): a pair participates iff one
-      // endpoint is a ρ-sampled FRESH membership and the other is
-      // sampled too (fresh or old) — at ρ=1 (≤ 20k gate) this reduces
-      // exactly to the old a.fresh || b.fresh rule
+      // paper's new × (new ∪ old) at ρ=1: a pair participates iff one
+      // endpoint is a FRESH membership
       val cand = adj
         .select(col("members"), posexplode(col("members")).as(Seq("i", "a")))
         .select(col("a"),
           explode(slice(col("members"), col("i") + lit(2), lit(2 * kDeg)))
             .as("b"))
-        .filter(
-          (col("a.useNew") && (col("b.useNew") || col("b.useOld"))) ||
-          (col("b.useNew") && (col("a.useNew") || col("a.useOld"))))
+        .filter(col("a.fresh") || col("b.fresh"))
         .select(col("a.w").as("v"), col("b.w").as("w"),
           round(graft.functions.CosineSim.cosineSim(col("a.ew"), col("b.ew")), 4)
             .as("cos"))
-      // both directions, merged with the current edges; each direction
-      // flag clears independently when ITS membership was sampled this
-      // round (once gossiped at that pivot, the novelty there is spent
-      // — the paper's sampled→false flag clear, per direction so the
-      // other neighborhood's mixing is never forfeited); candidates
-      // enter pending in both directions AND new, and topK's
-      // struct-min keeps the current row's flags when an edge is
-      // merely re-proposed
+      // both directions, merged with the current edges; every current
+      // edge has gossiped at both pivots this round, so its flags clear
+      // (the paper's sampled→false clear at ρ=1); candidates enter
+      // pending in both directions AND new, and topK's struct-min keeps
+      // the current row's flags when an edge is merely re-proposed
       val merged = graph
         .select(col("v"), col("w"), col("cos"),
-          (col("freshF") && !sampled(col("v"), col("w"))).as("freshF"),
-          (col("freshR") && !sampled(col("w"), col("v"))).as("freshR"),
+          lit(false).as("freshF"), lit(false).as("freshR"),
           lit(false).as("isNew"))
         .union(cand.select(col("v"), col("w"), col("cos"),
           lit(true).as("freshF"), lit(true).as("freshR"),
@@ -1344,20 +1226,12 @@ object Similarity {
         .union(cand.select(col("w").as("v"), col("v").as("w"), col("cos"),
           lit(true).as("freshF"), lit(true).as("freshR"),
           lit(true).as("isNew")))
-      val t0 = System.nanoTime()
-      // per-round candidate volume — trace-only instrument (one extra
-      // execution of the candidate stage; the A/B evidence for the
-      // ρ-sampling cost claim in SCALING.md)
-      val candVol = if (traceTruth.isDefined) cand.count() else -1L
       graph = topK(merged, kDeg).localCheckpoint(true)
-      // convergence meters UPDATES (edges first entering the graph),
-      // exactly as before ρ-sampling — lingering unsampled fresh flags
-      // must not keep the loop alive once the lists stop changing
+      // convergence meters UPDATES (edges first entering the graph)
       freshCount = graph.filter(col("isNew")).count()
       work += freshCount
       Caches.releaseCheckpoint(lastCk)
       lastCk = graph
-      traceRound(roundNo, freshCount, candVol, (System.nanoTime() - t0) / 1e9)
     }
     buildRounds(label) = roundNo
     buildWork(label) = work
@@ -1457,7 +1331,8 @@ object Similarity {
   private[operators] def searchAdj(spark: SparkSession,
       dir: String): DataFrame =
     // Served as a memoized CHECKPOINT LEAF per dir (r19, the
-    // Dedup.pairsLeaf rationale measured on this tier with KeyProbe):
+    // Dedup.pairsLeaf rationale, measured on this tier — SCALING.md
+    // §"r19 driver-planning cuts"):
     // every hop of every graph-search key referenced this frame's full
     // logical tree (union + shuffle-hash join + repartition over the
     // committed k-NN graph), so the walks' per-round plans re-analyzed
@@ -1780,10 +1655,10 @@ object Similarity {
     // geometry: layer ℓ has n/16^ℓ members — at sf0.1 layer 3 has ~5,
     // layer 2 ~78), so descending it buys nothing over simply SCORING
     // it — each skipped round is one eager barrier saved (the r19
-    // HnswProbe decomposition: at bench SFs the descent is pure stage
-    // count). Enter instead at the DEEPEST layer whose membership is
-    // enumerable (≤ [[EntryMax]]) and score ALL its members as the
-    // entry beam. Recall can only improve: members of every level ≥ ℓ
+    // sim_hnsw decomposition, SCALING.md §"r19 second wave": at bench
+    // SFs the descent is pure stage count). Enter instead at the
+    // DEEPEST layer whose membership is enumerable (≤ [[EntryMax]])
+    // and score ALL its members as the entry beam. Recall can only improve: members of every level ≥ ℓ
     // are members of level ℓ (levels are cumulative), so the candidates
     // any top-down walk could have accumulated by layer ℓ are a SUBSET
     // of members(ℓ) — the full-membership topB is the true layer-ℓ

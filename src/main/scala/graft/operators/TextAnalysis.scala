@@ -393,8 +393,9 @@ object TextAnalysis {
   // tie-breaks, and merge application — not just one round.
   def tokenBpeTrain(spark: SparkSession, dir: String): DataFrame = {
     val rounds = 10
-    // r19 barrier cut (measured with KeyProbe: the key's warm cost was
-    // ~21 eager barriers — two localCheckpoints per round — not data):
+    // r19 barrier cut (SCALING.md §"r19 driver-planning cuts": the
+    // key's warm cost was ~21 eager barriers — two localCheckpoints
+    // per round — not data):
     // the winning pair is ONE row, so it collects as a bounded driver
     // scalar (the suite's convention) and each round's vocab update
     // becomes a LITERAL narrow replace-projection over the previous

@@ -213,14 +213,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("target/scale/sf1")
     val mult = if (args.length > 1) args(1).toDouble else 10.0 // × sf0.1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def write(name: String, df: DataFrame, parts: Int): Unit = {
       df.repartition(parts)

@@ -46,4 +46,22 @@ class FannedSpec extends SparkSpec {
       s"fan-out must not reach a splittable input's plan:\n${planOf(fanned)}")
     assert(fanned.count() == Tables.documents(spark, sf).count())
   }
+
+  test("in-progress files under _temporary/ do not make a table splittable") {
+    // Hadoop's hidden-file convention: Spark's scan skips paths with a
+    // `_`/`.` component below the root, so the footer probe must too —
+    // else a half-written job's parts flip a one-row-group table to
+    // "splittable" and the fan-out silently turns off
+    val tmp = java.nio.file.Files
+      .createTempDirectory("fanned_spec_tmp_").toString
+    val table = s"$tmp/t.parquet"
+    Tables.documents(spark, sf).coalesce(1)
+      .write.mode("overwrite").parquet(table)
+    Tables.documents(spark, sf).repartition(8) // >= 8 row groups
+      .write.mode("overwrite").parquet(s"$table/_temporary/0")
+    val fanned = Tables.fanned(spark, tmp, "t", "doc_id")
+    assert(planOf(fanned).contains("Exchange"),
+      s"a one-row-group table must stay unsplittable:\n${planOf(fanned)}")
+    assert(fanned.count() == Tables.documents(spark, sf).count())
+  }
 }

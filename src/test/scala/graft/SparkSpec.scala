@@ -6,17 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** ONE session builder for every test entry point (the scalatest trait
   * below and the scalacheck Properties object). getOrCreate means the
   * first caller's config wins for the whole JVM — a second, drifted
-  * builder would silently run with someone else's config. */
+  * builder would silently run with someone else's config. It is the
+  * mains' conf set ([[Session]]) at a fixed 4 cores, so the tested
+  * plans are the benchmarked and verified ones on any host. */
 object TestSession {
-  def spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  def spark: SparkSession = Session.builder(cores = 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
 

@@ -166,16 +166,6 @@ class DedupSpec extends SparkSpec {
       "batch-internal duplicates must not flag against the corpus")
   }
 
-  test("ngramPairsPrefiltered emits exactly ngramPairs' output — a df=1 " +
-      "shingle can never contribute to an intersection") {
-    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
-    val plain = Dedup.ngramPairs(docs)
-    val pre = Dedup.ngramPairsPrefiltered(docs)
-    assert(plain.count() === pre.count())
-    assert(plain.exceptAll(pre).count() === 0)
-    assert(pre.exceptAll(plain).count() === 0)
-  }
-
   test("connectedComponents: chains, stars and pairs collapse to min id") {
     import spark.implicits._
     // 10–14 is a 5-node chain (diameter 4 → needs >1 propagation round,

@@ -643,4 +643,15 @@ class SimilaritySpec extends SparkSpec {
       fp + ":changed").isEmpty,
       "a mismatched fingerprint must MISS, not serve the old artifact")
   }
+
+  test("embed_rp over an EMPTY embeddings table: empty result, no crash") {
+    // max(size(embedding)) over zero rows is null; the dims bound reads
+    // it as 0, so the sign table and the projection are both empty
+    val dir = java.nio.file.Files.createTempDirectory("embed_rp_empty_").toString
+    Tables.embeddings(spark, sf).limit(0)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val out = Similarity.embedRp(spark, dir)
+    assert(out.count() === 0L)
+    assert(out.columns.toSeq === Seq("vec_id", "j", "y_micro8"))
+  }
 }
