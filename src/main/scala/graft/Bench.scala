@@ -56,11 +56,6 @@ import java.nio.file.{Files, Paths}
   *    162.6 → 138.2 s — SCALING.md "JIT code cache").
   */
 object Bench {
-  /** Queries whose wall time is dominated by streaming micro-batch fixed
-    * latency (checkpoint + multiple batches), not data volume. Keys
-    * `stream_tumbling`/`stream_sliding`/`stream_session` are single
-    * availableNow runs and stay in the headline by design (the GoldenSpec
-    * census test pins the classification of every stream_* key). */
   /** Warm-pass threshold (seconds) above which a key is "slow": slow
     * keys get best-of-3 warm passes + adaptive top-ups; faster keys are
     * fixed-overhead-dominated and stop after one warm pass. The header
@@ -90,6 +85,11 @@ object Bench {
   private[graft] def parsePrevSf(txt: String): Option[String] =
     """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
 
+  /** Queries whose wall time is dominated by streaming micro-batch fixed
+    * latency (checkpoint + multiple batches), not data volume. Keys
+    * `stream_tumbling`/`stream_sliding`/`stream_session` are single
+    * availableNow runs and stay in the headline by design (the GoldenSpec
+    * census test pins the classification of every stream_* key). */
   private[graft] val streamingFixed =
     Set("stream_late_data", "stream_dedup", "stream_join",
       "stream_join_outer", "stream_static_join", "stream_sink_files",

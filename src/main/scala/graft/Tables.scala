@@ -28,6 +28,15 @@ object Tables {
     loadMemo.getOrElseUpdate((spark, dir, name),
       spark.read.parquet(s"$dir/$name.parquet"))
 
+  /** Driver-side metadata scalar (a row count, a vector width) over an
+    * immutable fixture dir, memoized like [[load]] and likewise kept
+    * across `Caches.releaseAll()`: metadata, never data. */
+  private val scalarMemo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), Long]
+  private[graft] def scalar(spark: SparkSession, dir: String, name: String)(
+      compute: => Long): Long =
+    scalarMemo.getOrElseUpdate((spark, dir, name), compute)
+
   def region(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "customer")
@@ -151,17 +160,22 @@ object Tables {
     * pruning still push through the RepartitionByExpression to the
     * scan, so the fanned frame prunes/pushes exactly like `load`. */
   def fanned(spark: SparkSession, dir: String, name: String,
-      key: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = load(spark, dir, name)
-    val p = spark.sparkContext.defaultParallelism
-    // cores/4 spread, not all cores (r19, same calibration as Bench's
-    // AQE coalescing floor): full-width fanning made every downstream
-    // scan of the shared cached frames a 32-task stage, taxing the
-    // light consumers more than the heavy map stages gained.
-    val spread = math.max(2, p / 4)
-    if (splittableTo(spark, s"$dir/$name.parquet", math.max(1, spread))) df
-    else df.repartition(spread, col(key))
+      key: String): DataFrame =
+    fannedFrom(spark, dir, name, load(spark, dir, name), key)
+
+  // cores/4 spread, not all cores (r19, same calibration as the AQE
+  // coalescing floor): full-width fanning made every downstream scan of
+  // the shared cached frames a 32-task stage, taxing the light
+  // consumers more than the heavy map stages gained.
+  private def spread(spark: SparkSession): Int =
+    math.max(2, spark.sparkContext.defaultParallelism / 4)
+
+  /** [[fanned]] over an already-loaded frame `df` of table `name`. */
+  private def fannedFrom(spark: SparkSession, dir: String, name: String,
+      df: DataFrame, key: String): DataFrame = {
+    val s = spread(spark)
+    if (splittableTo(spark, s"$dir/$name.parquet", s)) df
+    else df.repartition(s, org.apache.spark.sql.functions.col(key))
   }
 
   /** CONTRACT-SORT width for heavy consumers above a sort (r20). The
@@ -184,7 +198,7 @@ object Tables {
   def wideSorted(spark: SparkSession, dir: String, name: String,
       df: DataFrame, cols: Column*): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
-    if (splittableTo(spark, s"$dir/$name.parquet", math.max(2, p / 4)))
+    if (splittableTo(spark, s"$dir/$name.parquet", spread(spark)))
       df.orderBy(cols: _*)
     else df.repartitionByRange(p, cols: _*).sortWithinPartitions(cols: _*)
   }
@@ -197,12 +211,6 @@ object Tables {
     fanned(spark, dir, "documents", "doc_id")
 
   /** [[fanned]] for the ts-normalized events frame. */
-  def fannedEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val df = events(spark, dir)
-    val p = spark.sparkContext.defaultParallelism
-    val spread = math.max(2, p / 4)
-    if (splittableTo(spark, s"$dir/events.parquet", math.max(1, spread))) df
-    else df.repartition(spread, col("event_id"))
-  }
+  def fannedEvents(spark: SparkSession, dir: String): DataFrame =
+    fannedFrom(spark, dir, "events", events(spark, dir), "event_id")
 }

@@ -117,7 +117,7 @@ object Analytic {
         col("o_orderkey"), col("o_custkey"),
         round(sum(col("o_totalprice")).over(w), 4).as("running_total"),
         count(lit(1)).over(w).as("running_n"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("o_orderkey")
   }
 
@@ -131,7 +131,7 @@ object Analytic {
         col("event_id"),
         lag(col("value"), 1).over(w).as("prev_value"),
         lead(col("value"), 1).over(w).as("next_value"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("event_id")
   }
 
@@ -144,7 +144,7 @@ object Analytic {
       .select(
         col("event_id"),
         round(avg(col("value")).over(w), 4).as("moving_avg"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("event_id")
   }
 
@@ -171,7 +171,7 @@ object Analytic {
         col("user_id"), col("ts_us"), col("event_id"),
         count(lit(1)).over(w).as("n_1h"),
         round(sum(col("value")).over(w), 4).as("sum_1h"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id", "ts_us", "event_id")
   }
 

@@ -1,55 +1,54 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Registry of operator-persisted frames (shingle caches, iterative-loop
-  * rank/label vectors) so harness entry points can release executor
-  * memory once a query family is done (ADVICE r4: `hashedShingles`
-  * stayed resident for the whole 80+-query bench session).
-  *
-  * Operators register every frame they `persist`; `graft.Bench` calls
-  * `releaseAll()` after the batch loop (before streaming latency is
-  * measured) and `graft.Verify` at shutdown. Releasing is safe at those
-  * points because every query's terminal action has already run;
-  * mid-session the caches stay shared — Spark's CacheManager dedups
-  * identical plans, so e.g. `dedup_near`/`dedup_ngram`/`graph_pagerank`
-  * reuse ONE hashed-shingle cache entry between them.
+/** The one lifecycle for data an operator keeps past its own construct:
+  * persisted frames ([[persist]]), memoized index frames ([[memo]]) and
+  * escaped eager checkpoints ([[registerCheckpoint]]) all live until the
+  * next [[releaseAll]]. `graft.Bench` and perfbench release before EVERY
+  * key (each key times its own working set, cold build included) and at
+  * shutdown; `graft.Verify` at shutdown. Every query's terminal action
+  * has run at those points; between them the caches stay shared —
+  * CacheManager dedups identical plans, so `dedup_near`/`dedup_ngram`/
+  * `graph_pagerank` reuse ONE hashed-shingle cache entry (ADVICE r4).
+  * `releaseAll` keeps `Tables`' loader, row-group and metadata-scalar
+  * memos (plans and driver scalars, no data), committed ANN indexes on
+  * disk (`AnnIndexStore`) and the NN-Descent spec counters.
   */
 object Caches {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
   private val checkpoints = scala.collection.mutable.ArrayBuffer
     .empty[java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]
-  private val releaseHooks = scala.collection.mutable.ArrayBuffer
-    .empty[() => Unit]
+  private val memos = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), Any]
 
-  /** Register a callback to run at every `releaseAll()` — for operator
-    * MEMOS that hold a checkpoint-backed frame by strong reference
-    * (e.g. the k-NN graph index in `Similarity.knnGraph`). The weak
-    * checkpoint registry alone is not enough for those: the memo keeps
-    * the backing RDD reachable, and after release the memoized frame's
-    * blocks are unrecomputable, so the memo itself must be dropped at
-    * the same harness boundary. The hook stays registered for the JVM's
-    * lifetime (it clears a map; running it twice is a no-op). */
-  private[graft] def onRelease(hook: () => Unit): Unit = synchronized {
-    releaseHooks += hook
+  /** Persist `df` at MEMORY_AND_DISK (oversized frames spill, never
+    * evict-and-recompute) until the next [[releaseAll]]. For frames an
+    * operator consumes more than once, and the PRE-SORT persist (r20):
+    * a terminal contract sort's range sampler re-executes its whole
+    * child subtree a second time per action, so persisting the narrow
+    * pre-sort frame makes the sample pass fill the cache and the sort
+    * read it. persist, not localCheckpoint: the checkpoint variant pays
+    * ~0.25 s of physical planning at CONSTRUCT (A/B'd on
+    * multimodal_decode). SCALING.md §"Operator cache lifecycle" has
+    * the sf0.1 A/B that keeps it. */
+  private[graft] def persist[T <: Dataset[_]](df: T): T = synchronized {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    frames += df
+    df
   }
 
-  private[graft] def register[T <: Dataset[_]](df: T): T = synchronized {
-    frames += df; df
-  }
-
-  /** Pre-sort persist of a narrow result frame (r20): a terminal
-    * contract sort's range sampler re-executes its whole child subtree
-    * (windows, joins, parses) a second time per action. Persisting the
-    * narrow pre-sort frame makes the sample pass fill the cache and the
-    * sort read it — one subtree execution per action. persist, not
-    * localCheckpoint: the checkpoint variant pays ~0.25 s of physical
-    * planning at CONSTRUCT (toRdd) for the same dedup (A/B'd on
-    * multimodal_decode). Registered here so the harness releases the
-    * blocks at the per-key boundary; within one action the cache holds
-    * exactly one narrow copy of the key's own result. */
-  private[graft] def presortPersist[T <: Dataset[_]](df: T): T =
-    register({ df.persist(); df })
+  /** `build` memoized per (session, dir, name) until the next
+    * [[releaseAll]], which must drop it: a memoized frame may be
+    * checkpoint-backed, and released blocks are unrecomputable. Keyed
+    * on the session like `Tables.load` (a plan born on one session
+    * cannot execute on another). TrieMap's `getOrElseUpdate` runs
+    * `build` outside the map, so builds may nest (`deletedGraph` builds
+    * through `refreshedGraph`), which `computeIfAbsent` rejects. */
+  private[graft] def memo[V](spark: SparkSession, dir: String, name: String)(
+      build: => V): V =
+    memos.getOrElseUpdate((spark, dir, name), build).asInstanceOf[V]
 
   /** Queue an eager `localCheckpoint` frame that ESCAPED to a caller
     * (e.g. `join_bloom`'s result) for release at the next
@@ -86,8 +85,10 @@ object Caches {
       df
     }
 
+  /** Drop every memo, unpersist every [[persist]]ed frame and release
+    * every registered checkpoint. */
   def releaseAll(): Unit = synchronized {
-    releaseHooks.foreach(_.apply())
+    memos.clear()
     frames.foreach(_.unpersist(false))
     frames.clear()
     // entries already GC-cleared were reclaimed by ContextCleaner.

@@ -85,9 +85,8 @@ object Dedup {
     * [[Caches]] so the harness releases it once the query family is
     * done (ADVICE r4: previously resident for the whole session). */
   private[operators] def hashedShingles(docs: DataFrame): DataFrame =
-    Caches.register(shingles(docs)
-      .select(col("doc_id"), xxhash64(col("s")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Caches.persist(shingles(docs)
+      .select(col("doc_id"), xxhash64(col("s")).as("h")))
 
   /** Canonical content hash: sha256 over the fully-normalized text
     * (NFD + mark strip + case fold + ws collapse + trim — the
@@ -275,16 +274,13 @@ object Dedup {
     * decision tier (PageRank, connected components) reads it as ONE
     * LogicalRDD leaf: the LSH tree is planned and executed once per
     * harness window, and every loop round plans leaf-sized trees. The
-    * memo follows the hnswMemo convention — cleared by Caches at the
-    * harness boundary, so bench keys still pay their own cold build.
+    * [[Caches.memo]] clears it at the harness boundary, so bench keys
+    * still pay their own cold build.
     * `dedup_near` itself keeps the raw [[minhashPairs]] frame (its
     * declared plan shape IS the LSH pipeline — PlanSpec pins it). */
-  private val pairsLeafMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  Caches.onRelease(() => pairsLeafMemo.clear())
   private[operators] def pairsLeaf(spark: SparkSession,
       dir: String): DataFrame =
-    pairsLeafMemo.getOrElseUpdate(dir,
+    Caches.memo(spark, dir, "pairsLeaf")(
       Caches.registerCheckpoint(
         minhashPairs(Tables.fannedDocuments(spark, dir))
           .select("doc_a", "doc_b").localCheckpoint(true)))
@@ -341,8 +337,7 @@ object Dedup {
     // CacheManager dedups the identical plan subtree, so one entry
     // serves every consumer in a session; Caches releases it at the
     // harness boundary like every other operator cache.
-    Caches.register(jaccardFilter(inter, cnt, minJ)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Caches.persist(jaccardFilter(inter, cnt, minJ))
   }
 
   // `dedup_components` — connected components over the near-dup pair
@@ -592,8 +587,7 @@ object Dedup {
     // the key's declared dominant cost, paid twice. The cached frame is
     // one (doc_id, long) row per document — negligible storage at any
     // corpus scale — and the shingle scan now runs exactly once.
-    val fp = Caches.register(simhash(Tables.fannedDocuments(spark, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val fp = Caches.persist(simhash(Tables.fannedDocuments(spark, dir)))
     val banded = fp.select(
       col("doc_id"), col("simhash"),
       posexplode(array(

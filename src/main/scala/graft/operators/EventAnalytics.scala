@@ -182,7 +182,7 @@ object EventAnalytics {
         col("s.event_id").as("last_event"),
         col("s.event_type").as("last_type"),
         round(col("s.value"), 4).as("last_value"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id")
 
   // `agg_sketch_rollup` — mergeable-sketch distinct counting
@@ -309,13 +309,12 @@ object EventAnalytics {
     // hold — and the log is read ONCE to build it (PlanSpec asserts
     // the consumers read the cache, not the file). Same registry
     // lifecycle as the shingle cache (operators.Caches).
-    val agg = Caches.register(
+    val agg = Caches.persist(
       Tables.events(spark, dir)
         .select(date_trunc("hour", col("ts")).as("h"),
           col("event_type"), col("value"))
         .groupBy("h", "event_type")
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-        .persist())
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value")))
     val grid = agg.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
       .select(explode(
         sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))
@@ -354,13 +353,12 @@ object EventAnalytics {
   // — 12 orders of magnitude beyond double rounding error — so the
   // floor is exact in both engines.
   def tsInterpolate(spark: SparkSession, dir: String): DataFrame = {
-    val obs = Caches.register(
+    val obs = Caches.persist(
       Tables.events(spark, dir)
         .select(date_trunc("hour", col("ts")).as("h"),
           col("event_type"), col("value"))
         .groupBy("h", "event_type")
-        .agg(round(sum(col("value")) * 100).cast("long").as("c_obs"))
-        .persist())
+        .agg(round(sum(col("value")) * 100).cast("long").as("c_obs")))
     val grid = obs.agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
       .select(explode(
         sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("h"))
@@ -392,7 +390,7 @@ object EventAnalytics {
           .otherwise(floor((lit(2) * num + den) / (lit(2) * den))
             .cast("long"))
           .as("value_cents"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("h", "event_type")
   }
 
@@ -421,7 +419,7 @@ object EventAnalytics {
         coalesce(col("next_from"),
           lit("2100-01-01 00:00:00").cast("timestamp")).as("valid_to"),
         col("next_from").isNull.cast("int").as("is_current"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id", "valid_from", "event_id")
   }
 
@@ -459,7 +457,7 @@ object EventAnalytics {
         min(col("ts_us")).as("start_us"),
         max(col("ts_us")).as("end_us"),
         (max(col("ts_us")) - min(col("ts_us"))).as("duration_us"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id", "session_id")
   }
 
@@ -551,7 +549,7 @@ object EventAnalytics {
       .filter(col("run_len") >= 2)
       .select(col("user_id"), col("event_type"), col("first_event"),
         col("last_event"), col("run_len"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id", "first_event")
   }
 
@@ -711,15 +709,14 @@ object EventAnalytics {
   // anywhere). Output: the 1-row (d_num, n1, n2, value_at) exact
   // fraction — D = d_num/(n1·n2) is the consumer's one division.
   def statKs(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Caches.register(Tables.events(spark, dir)
+    val pts = Caches.persist(Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("value"), pmod(col("user_id"), lit(2L)).as("side"))
       .groupBy(col("value"))
       .agg(
         sum(when(col("side") === 0L, lit(1L)).otherwise(lit(0L))).as("a"),
         sum(when(col("side") === 1L, lit(1L)).otherwise(lit(0L))).as("b"))
-      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
     val bktTot = pts.groupBy(col("bkt"))
       .agg(sum(col("a")).as("ba"), sum(col("b")).as("bb"))
     val wB = Window.orderBy("bkt")
@@ -767,7 +764,7 @@ object EventAnalytics {
   // past that). The consumer's z-score is one division away from
   // (u2_a, n1, n2, tie_t); no float appears before the output.
   def statMannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Caches.register(Tables.events(spark, dir)
+    val pts = Caches.persist(Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("value"), pmod(col("user_id"), lit(2L)).as("side"))
       .groupBy(col("value"))
@@ -775,8 +772,7 @@ object EventAnalytics {
         sum(when(col("side") === 0L, lit(1L)).otherwise(lit(0L))).as("a"),
         sum(when(col("side") === 1L, lit(1L)).otherwise(lit(0L))).as("b"))
       .withColumn("t", col("a") + col("b"))
-      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
     val bktTot = pts.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
     val wB = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -824,7 +820,7 @@ object EventAnalytics {
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .select(col("event_id"), col("user_id"),
         round((num / den), 4).as("ewma"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("event_id")
   }
 
@@ -1135,7 +1131,7 @@ object EventAnalytics {
       when(col("a") > 0L && col("a") < col("n"),
         floor((col("n_runs").cast("double") - mu) / sqrt(sig2) * lit(1e6))
           .cast("long")).as("z_micro"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id")
   }
 
@@ -1192,7 +1188,7 @@ object EventAnalytics {
         lit(25L) * col("var_sc"))
       .select(col("user_id"), col("event_id"), col("c"), col("n"),
         col("dev"), col("var_sc"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id", "event_id")
   }
 
@@ -1458,7 +1454,7 @@ object EventAnalytics {
       .filter(col("pick") === 1 && col("n") >= 10L)
       .select(col("user_id"), col("n"), col("t").as("cp_t"),
         col("event_id").as("cp_event_id"), col("dev_scaled"))
-      .transform(Caches.presortPersist) // r20: see Caches.presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id")
   }
 
@@ -1618,7 +1614,7 @@ object EventAnalytics {
   def evalAuc(spark: SparkSession, dir: String): DataFrame = {
     val hex = conv(substring(md5(col("event_id").cast("string")), 1, 1),
       16, 10).cast("long")
-    val pts = Caches.register(Tables.events(spark, dir)
+    val pts = Caches.persist(Tables.events(spark, dir)
       .filter(col("value").isNotNull)
       .select(col("value"),
         ((hex < 4L) || (col("value") >= 90.0)).cast("long").as("pos"))
@@ -1626,8 +1622,7 @@ object EventAnalytics {
       .agg(sum(col("pos")).as("a"),
         sum(lit(1L) - col("pos")).as("b"))
       .withColumn("t", col("a") + col("b"))
-      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
     val bktTot = pts.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
     val wB = Window.orderBy("bkt")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1805,14 +1800,13 @@ object EventAnalytics {
     // the b-marginals all fold it, and without the cache each branch
     // would re-scan events (the one place a bounded cache beats the
     // one-pass window trick — see below).
-    val cells = Caches.register(Tables.events(spark, dir)
+    val cells = Caches.persist(Tables.events(spark, dir)
       .select(
         when(draw("ka:") < 100L, rot(col("event_type")))
           .otherwise(col("event_type")).as("a"),
         when(draw("kb:") < 200L, rot(col("event_type")))
           .otherwise(col("event_type")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
-      .persist())
+      .groupBy("a", "b").agg(count(lit(1)).as("c")))
     // Σ_k r_k·c_k from a marginal join over the distinct classes —
     // NOT the earlier diagonal shortcut (sum ra·cb over a=b cells),
     // which silently dropped a class's marginal product whenever its

@@ -45,7 +45,6 @@ object Graph {
   // The graph is undirected and every node has deg ≥ 1, so rank mass is
   // conserved and no dangling-node term is needed.
   def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // PLAN-LEAF entry (r19, SCALING.md §"r19 driver-planning cuts"):
     // the warm key spent 1.1 s of a 1.7 s pass in DRIVER planning —
     // every reference to the pair frame re-analyzed and re-canonicalized
@@ -79,8 +78,8 @@ object Graph {
     // round's join reuses this partitioning and only the rank vector
     // moves (guide §2.4: two operations keyed the same way share one
     // exchange).
-    val edgesDeg = Caches.register(
-      edges.join(deg, Seq("u")).repartition(parts, col("u")).persist(lvl))
+    val edgesDeg = Caches.persist(
+      edges.join(deg, Seq("u")).repartition(parts, col("u")))
     val n = edgesDeg.select(countDistinct(col("u"))).head.getLong(0)
 
     var pr = edgesDeg.select(col("u").as("node")).distinct()
@@ -141,7 +140,6 @@ object Graph {
   // all-integer (user, community, community size).
   private val LpaRounds = 4
   def graphCommunities(spark: SparkSession, dir: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val wb = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"), to_date(col("ts")))
       .orderBy(col("ts"), col("event_id"))
@@ -163,11 +161,10 @@ object Graph {
     // treatment): each LPA round joins (edges ⋈ lab) on v, so the
     // pre-partitioned cache is scanned in place and only the tiny
     // label vector shuffles per round (guide §2.4).
-    val edges = Caches.register(
+    val edges = Caches.persist(
       ebase.select(col("a").as("u"), col("b").as("v"), col("w"))
         .union(ebase.select(col("b").as("u"), col("a").as("v"), col("w")))
-        .repartition(col("v"))
-        .persist(lvl))
+        .repartition(col("v")))
     var lab = edges.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     val win = org.apache.spark.sql.expressions.Window
@@ -222,20 +219,18 @@ object Graph {
         col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .select(col("a.p").as("u"), col("b.p").as("v"))
       .distinct()
-    val deg = Caches.register(
+    val deg = Caches.persist(
       e0.select(explode(array(col("u"), col("v"))).as("x"))
-        .groupBy("x").agg(count(lit(1)).as("d"))
-        .persist())
+        .groupBy("x").agg(count(lit(1)).as("d")))
     val lower = // orientation predicate: (d(u), u) < (d(v), v)
       col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = Caches.register(
+    val oriented = Caches.persist(
       e0.join(deg.select(col("x").as("u"), col("d").as("du")), Seq("u"))
         .join(deg.select(col("x").as("v"), col("d").as("dv")), Seq("v"))
         .select(
           when(lower, col("u")).otherwise(col("v")).as("src"),
           when(lower, col("v")).otherwise(col("u")).as("dst"),
-          when(lower, col("dv")).otherwise(col("du")).as("ddst"))
-        .persist())
+          when(lower, col("dv")).otherwise(col("du")).as("ddst")))
     val wedges = oriented.as("e1").join(oriented.as("e2"),
         col("e1.src") === col("e2.src") &&
         (col("e1.ddst") < col("e2.ddst") ||
@@ -290,9 +285,9 @@ object Graph {
     // (r19, the graphPagerank treatment): every round's frontier join
     // probes it on u, so the cache is scanned in place and only the
     // frontier shuffles per round (guide §2.4).
-    val edges = Caches.register(
+    val edges = Caches.persist(
       e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-        .repartition(col("u")).persist())
+        .repartition(col("u")))
     // ONE eager checkpoint per round — the new frontier, which the next
     // round consumes twice (expansion + settled-set anti-join), so its
     // lineage must cut. The settled set itself needs NO checkpoint

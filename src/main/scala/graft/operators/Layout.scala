@@ -306,13 +306,6 @@ object Layout {
   // ≥ 3 output files within a 4× size band); production leaves the
   // 64 MB default. Read-back proves no rows moved semantically —
   // partitioning is physical only.
-  // Per-sf-dir lineitem row count for the rebalance advisory: a
-  // deterministic scalar for an immutable fixture dir, so it survives
-  // Caches.releaseAll() by design (the bounded-driver-scalar memo
-  // convention).
-  private val rebalRowCounts =
-    new scala.collection.concurrent.TrieMap[String, Long]
-
   private[graft] def rebalFrame(spark: SparkSession, dir: String): DataFrame = {
     val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
       "l_returnflag", "l_extendedprice")
@@ -337,8 +330,9 @@ object Layout {
     // Row count cached per sf-dir (VERDICT r13 item 4: a full lineitem
     // count() scan ran on EVERY execution just to size the advisory —
     // 4× redundant per bench key; at 100 TB this number comes from
-    // table stats, not a rescan). The fixture dirs are immutable.
-    val rows = rebalRowCounts.getOrElseUpdate(dir,
+    // table stats, not a rescan). The fixture dirs are immutable, so
+    // the count survives Caches.releaseAll() (Tables.scalar).
+    val rows = Tables.scalar(spark, dir, "lineitemRows")(
       Tables.lineitem(spark, dir).count())
     val advisory = math.max(8192L, rows * 10L / 8)
     val keys = Map(

@@ -221,10 +221,10 @@ object Multimodal {
         MediaMeta(m.doc_id, fmt, w, h, d, c, m.blob.length.toLong)
       }
     }
-    // pre-sort persist (r20, Caches.presortPersist): the contract
+    // pre-sort persist (r20, Caches.persist): the contract
     // sort's range sampler otherwise re-reads every blob and re-runs
     // the container parse; the persisted frame is the NARROW metadata
     // (blob dropped) — one binaryFile pass per action.
-    Caches.presortPersist(decoded.toDF()).orderBy("doc_id")
+    Caches.persist(decoded.toDF()).orderBy("doc_id")
   }
 }

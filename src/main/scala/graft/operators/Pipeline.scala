@@ -45,8 +45,7 @@ object Pipeline {
       .groupBy(Dedup.exactHash(col("text")).as("h"))
       .agg(min(col("doc_id")).as("doc_id"))
       .select("doc_id")
-    val d = Caches.register(docs.join(surv, Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val d = Caches.persist(docs.join(surv, Seq("doc_id")))
 
     // 2. near-dup clusters over survivors (exact J ≥ 0.8 contract).
     // (r19: a checkpointed-leaf wrap of this pair frame was A/B'd and

@@ -158,7 +158,8 @@ object Relational {
   // Q10 `join_range_theta` — equi key + theta (range) residual:
   // lineitems priced above 55× the part's retail price. The equi
   // component keeps it a hash join with a non-equi filter residual
-  // (at scale: no cartesian blowup).
+  // (at scale: no cartesian blowup). No pre-sort persist: it measured
+  // slower here (SCALING.md "Operator cache lifecycle").
   def joinRangeTheta(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .join(Tables.part(spark, dir),
@@ -166,7 +167,6 @@ object Relational {
         col("l_extendedprice") > col("p_retailprice") * 55.0)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_linenumber"), col("l_extendedprice"), col("p_retailprice"))
-      .transform(graft.operators.Caches.presortPersist) // r20
       .orderBy(Tables.lineitemKey.map(col): _*)
 
   // Q11 `join_asof` — as-of join: each event matched to the latest order
@@ -205,7 +205,7 @@ object Relational {
       .filter(col("kind") === 1)
       .select(col("event_id"),
         coalesce(col("matched"), lit(-1L)).as("matched_order"))
-      .transform(presortPersist) // r20: see presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("event_id")
   }
 
@@ -262,7 +262,7 @@ object Relational {
             .when(col("fk").isNull, distB)
             .otherwise(least(distB, distF)),
           lit(-1L)).as("dist_us"))
-      .transform(presortPersist) // r20: see presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("event_id")
   }
 
@@ -711,7 +711,7 @@ object Relational {
       .join(dim, col("user_id") === col("d_user") &&
         col("ts") >= col("valid_from") && col("ts") < col("valid_to"))
       .select(col("user_id"), col("ts"), col("event_id"), col("status"))
-      .transform(presortPersist) // r20: see presortPersist
+      .transform(Caches.persist) // r20 pre-sort persist: see Caches.persist
       .orderBy("user_id", "ts", "event_id")
   }
 
@@ -891,12 +891,9 @@ object Relational {
           when(col("next_t_us") - unix_micros(col("t")) <= tolUs,
             col("next_key")),
           lit(-1L)).as("next_order"))
-      .transform(presortPersist)
+      .transform(Caches.persist)
       .orderBy("event_id")
   }
-
-  private def presortPersist(df: DataFrame): DataFrame =
-    graft.operators.Caches.presortPersist(df)
 
   // `sql_recursive_cte` — WITH RECURSIVE (Spark 4.0's headline SQL
   // addition): iterative queries — hierarchy walks, transitive closure,

@@ -299,9 +299,6 @@ object Similarity {
   // k×dim (tiny → broadcast), list assignment is the committed
   // inverted file, and each probe's candidate scoring is a
   // broadcast-hash join on the list id — no all-pairs anywhere.
-  private val ivfMemo =
-    new scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]
-  Caches.onRelease(() => ivfMemo.clear())
   private def ivfParams = s"ivf.v1:k=$NLists:seed=42:sample=0.2"
 
   /** Centroid table (`list_id`, `centroid: array<double>`) +
@@ -322,7 +319,7 @@ object Similarity {
     * KMeansModel survives the fit. */
   private[operators] def ivfIndex(spark: SparkSession, dir: String):
       (DataFrame, DataFrame) =
-    ivfMemo.getOrElseUpdate(dir, {
+    Caches.memo(spark, dir, "ivf") {
       val fpCent = AnnIndexStore.fingerprint(spark, dir, ivfParams + ":cent")
       val fpList = AnnIndexStore.fingerprint(spark, dir, ivfParams + ":list")
       (AnnIndexStore.readCommitted(spark, "ivfcent", dir, fpCent),
@@ -350,7 +347,7 @@ object Similarity {
             AnnIndexStore.commit(spark, "ivflist", dir, listed,
               "list_id", fpList))
       }
-    })
+    }
 
   /** Per-list vector counts of the IVF index, ascending by list id. */
   private[operators] def ivfListSizes(spark: SparkSession, dir: String): Seq[Long] =
@@ -463,10 +460,8 @@ object Similarity {
   // per dir derives the true bound; like the r19 corpus-count memo it
   // caches metadata, never data. An empty table has no max: 0 dims,
   // so the sign table and the result are empty.
-  private val rpDimsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def rpDims(spark: SparkSession, dir: String): Long =
-    rpDimsMemo.getOrElseUpdate((spark, dir),
+    Tables.scalar(spark, dir, "rpDims")(
       Tables.embeddings(spark, dir)
         .select(coalesce(max(size(col("embedding"))), lit(0)))
         .head().getInt(0).toLong)
@@ -794,16 +789,13 @@ object Similarity {
   // change rebuilds; the build is deterministic (md5-seeded init,
   // integer-stable comparator), so a committed read and a fresh build
   // are row-identical — `sim_nndescent`'s oracle holds on either path.
-  private val graphMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  Caches.onRelease(() => graphMemo.clear())
   // The params keep the r18 ρ-sampling tags (`rho=1.0`, `oldsamp`,
   // `conv=1e-3xrho`): the build runs at ρ=1 (the NN-Descent note above),
   // and unchanged strings keep committed indexes valid.
   private def knnParams =
     "knng.v10:kfn=log12:conv=1e-3xrho:dirflags:oldsamp:capfn=log8:rho=1.0:init=ivfhalf(ivf.v1)"
   private[operators] def knnGraph(spark: SparkSession, dir: String): DataFrame =
-    graphMemo.getOrElseUpdate(dir, {
+    Caches.memo(spark, dir, "knng") {
       val fp = AnnIndexStore.fingerprint(spark, dir, knnParams)
       AnnIndexStore.readCommitted(spark, "knng", dir, fp).getOrElse {
         val built = buildKnnGraph(spark, dir)
@@ -815,7 +807,7 @@ object Similarity {
         Caches.releaseCheckpoint(built)
         served
       }
-    })
+    }
 
   def simNndescent(spark: SparkSession, dir: String): DataFrame = {
     val graph = knnGraph(spark, dir)
@@ -847,14 +839,11 @@ object Similarity {
   // index. Approximate regime ⇒ no SQL oracle (the sim_ann class);
   // output is the probes' top-10 for the 10 standard probes AND 10
   // delta probes, so the declared rows exercise both populations.
-  private val refreshMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  Caches.onRelease(() => refreshMemo.clear())
   private def refreshParams =
     "knngref.v8:kfn=log12:conv=1e-3xrho:dirflags:oldsamp:capfn=log8:split=0.9:rho=1.0"
   private[operators] def refreshedGraph(spark: SparkSession,
       dir: String): DataFrame =
-    refreshMemo.getOrElseUpdate(dir, {
+    Caches.memo(spark, dir, "knngref") {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val n0 = emb.count() * 9 / 10
@@ -876,7 +865,7 @@ object Similarity {
         Caches.releaseCheckpoint(built)
         served
       }
-    })
+    }
 
   def simIndexRefresh(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
@@ -912,9 +901,6 @@ object Similarity {
   // id in any served artifact or result, (b) post-delete recall ≥ 0.9
   // against brute force over the LIVE corpus on standard AND damaged
   // probes, (c) the repair's update stream is delta-sized.
-  private val deleteMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  Caches.onRelease(() => deleteMemo.clear())
   private def deleteParams =
     s"knngdel.v1:tomb=mod20eq7:repair=reseed:base=$refreshParams"
   /** The 5% tombstone predicate — deterministic, engine-replayable. */
@@ -933,7 +919,7 @@ object Similarity {
   /** Post-delete repaired k-NN graph, committed as `knngdel`. */
   private[operators] def deletedGraph(spark: SparkSession,
       dir: String): DataFrame =
-    deleteMemo.getOrElseUpdate(dir, {
+    Caches.memo(spark, dir, "knngdel") {
       val fp = AnnIndexStore.fingerprint(spark, dir, deleteParams)
       AnnIndexStore.readCommitted(spark, "knngdel", dir, fp).getOrElse {
         val emb = Tables.embeddings(spark, dir)
@@ -954,7 +940,7 @@ object Similarity {
         Caches.releaseCheckpoint(built)
         served
       }
-    })
+    }
 
   def simIndexDelete(spark: SparkSession, dir: String): DataFrame = {
     // both tiers must forget: materialize (and commit) the post-delete
@@ -1290,18 +1276,12 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe")))
   }
 
-  /** Beam search for an ARBITRARY probe frame (`qid`, `qe`) — the
-    * declared key passes in-corpus probes; SimilaritySpec passes
-    * held-out (out-of-sample) query vectors through this same entry to
-    * pin that nothing in the search depends on the query being a
-    * corpus member (VERDICT r15 item 4): seeds are hash-derived from
-    * qid, scoring is against the query embedding, and the self-drop
-    * filter is a no-op for OOS qids by construction.
-    *
-    * `seeds0`/`hops`: the HNSW tier ([[simHnsw]]) re-enters this same
-    * layer-0 search with DESCENDED entry points instead of md5-random
-    * ones and one fewer hop — the entry quality is what the layer
-    * descent buys. */
+  /** Corpus size for the seed-draw modulus — a bounded driver scalar
+    * over an immutable fixture dir ([[graft.Tables.scalar]]), so
+    * repeated serve passes skip the count job. */
+  private[operators] def embCount(spark: SparkSession, dir: String): Long =
+    Tables.scalar(spark, dir, "embCount")(
+      Tables.embeddings(spark, dir).count())
   /** The search-ready adjacency: symmetrized k-NN edges CARRYING the
     * neighbor's embedding AND its metadata label, pre-partitioned on
     * the hop key and persisted — each hop is then ONE hash join (beam
@@ -1317,17 +1297,6 @@ object Similarity {
     * filter map-side — the production convention (vector stores store
     * filterable metadata inline with the graph) — instead of a
     * per-hop corpus-sized label join. */
-  private val searchAdjMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val embCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-  Caches.onRelease(() => searchAdjMemo.clear())
-  /** Corpus size for the seed-draw modulus — a bounded driver scalar
-    * over an immutable fixture dir (the rebalRowCounts convention), so
-    * repeated serve passes skip the count job. */
-  private[operators] def embCount(spark: SparkSession, dir: String): Long =
-    embCountMemo.getOrElseUpdate(dir,
-      Tables.embeddings(spark, dir).count())
   private[operators] def searchAdj(spark: SparkSession,
       dir: String): DataFrame =
     // Served as a memoized CHECKPOINT LEAF per dir (r19, the
@@ -1342,7 +1311,7 @@ object Similarity {
     // O(n·k·dim) — the index itself, exactly what a production search
     // tier keeps resident), cleared with the memo at the Caches
     // boundary so each bench key still pays its own cold build.
-    searchAdjMemo.getOrElseUpdate(dir, {
+    Caches.memo(spark, dir, "searchAdj") {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"), col("label"))
       val graph = knnGraph(spark, dir)
@@ -1354,8 +1323,20 @@ object Similarity {
             .hint("shuffle_hash"), Seq("w"))
           .repartition(col("v"))
           .localCheckpoint(true))
-    })
+    }
 
+  /** Beam search for an ARBITRARY probe frame (`qid`, `qe`) — the
+    * declared key passes in-corpus probes; SimilaritySpec passes
+    * held-out (out-of-sample) query vectors through this same entry to
+    * pin that nothing in the search depends on the query being a
+    * corpus member (VERDICT r15 item 4): seeds are hash-derived from
+    * qid, scoring is against the query embedding, and the self-drop
+    * filter is a no-op for OOS qids by construction.
+    *
+    * `seeds0`/`hops`: the HNSW tier ([[simHnsw]]) re-enters this same
+    * layer-0 search with DESCENDED entry points instead of md5-random
+    * ones and one fewer hop — the entry quality is what the layer
+    * descent buys. */
   private[operators] def graphSearchFor(spark: SparkSession, dir: String,
       probes0: DataFrame, seeds0: Option[DataFrame] = None,
       hops: Int = Hops): DataFrame = {
@@ -1412,8 +1393,7 @@ object Similarity {
         .select(col("qid"),
           pmod(conv(substring(md5(concat(lit("gs:"), col("qid"), lit(":"),
             col("i"))), 1, 12), 16, 10).cast("long"), lit(n)).as("node"))
-      Caches.register(topB(score(seeds), Beam)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      Caches.persist(topB(score(seeds), Beam))
     }
     // beam side broadcast (≤ queries·Beam rows) — the cached index is
     // scanned map-side once per hop, never shuffled (see score())
@@ -1425,8 +1405,7 @@ object Similarity {
         round(graft.functions.CosineSim.cosineSim(col("qe"), col("ew")), 4)
           .as("cos"))
     for (_ <- 1 until hops) {
-      beam = Caches.register(topB(beam.union(frontierOf(beam)), Beam)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      beam = Caches.persist(topB(beam.union(frontierOf(beam)), Beam))
     }
     // the LAST hop folds the output cap into its own round (r19): with
     // Beam ≥ K+1 and at most one self-row per query, top-K of the
@@ -1492,14 +1471,6 @@ object Similarity {
     * smaller than the first layer that genuinely needs walking. */
   private val EntryMax = 512L
 
-  private val hnswMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  /** dir → (entry level, entry-layer member ids) — see the entry
-    * memo note in [[hnswDescend]]; entryLvl 0 encodes "no upper
-    * layers" (the descend-nothing fallback). */
-  private val hnswEntryMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Array[Long])]
-  Caches.onRelease(() => { hnswMemo.clear(); hnswEntryMemo.clear() })
   /** Member count above which an upper layer's edge lists build by
     * RESTRICTED NN-DESCENT instead of the within-layer brute-force
     * join (r19, the mult-1000 wall): brute force scores |layer|² pairs
@@ -1517,7 +1488,7 @@ object Similarity {
   private def hnswParams =
     s"hnsw.v3:f=$LayerFanout:k=$LayerK:blm=$BruteLayerMax"
   private[operators] def hnswLayers(spark: SparkSession, dir: String): DataFrame =
-    hnswMemo.getOrElseUpdate(dir,
+    Caches.memo(spark, dir, "hnsw")(
       AnnIndexStore.serve(spark, "hnsw", dir, hnswParams, "lvl")(
         buildHnswLayers(spark, dir)))
 
@@ -1671,8 +1642,10 @@ object Similarity {
     // job census showed the filtered key spending its whole budget on
     // ~50 tiny jobs' scheduling, not on data. Bounded driver scalars
     // throughout (≤ log16 n count rows; ≤ EntryMax entry ids); the
-    // memo clears with hnswMemo at the harness cache boundary.
-    val (entryLvl, entryIds) = hnswEntryMemo.getOrElseUpdate(dir, {
+    // memo clears with the layer memo at the harness cache boundary.
+    // Value: (entry level, entry-layer member ids); entryLvl 0 encodes
+    // "no upper layers" (the descend-nothing fallback).
+    val (entryLvl, entryIds) = Caches.memo(spark, dir, "hnswEntry") {
       val lTopRow = layers.agg(max(col("lvl"))).collect()(0)
       if (lTopRow.isNullAt(0)) (0, Array.empty[Long])
       else {
@@ -1687,7 +1660,7 @@ object Similarity {
           .select(col("v")).distinct()
           .collect().map(_.getLong(0)).sorted)
       }
-    })
+    }
     if (entryLvl == 0) return None
     import spark.implicits._
     val entry = probes.select(col("qid")).crossJoin(
@@ -1828,11 +1801,10 @@ object Similarity {
     // index-side frame (label → bounded member sample): persisted so
     // serve passes share one materialization (CacheManager dedup, the
     // searchAdj convention) instead of re-aggregating the corpus
-    val byLabel = Caches.register(
+    val byLabel = Caches.persist(
       emb.groupBy(col("label"))
         .agg(slice(sort_array(collect_list(col("vec_id"))), 1, 4096)
-          .as("members"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .as("members")))
     val matchedSeeds = probes
       .join(broadcast(byLabel), pred(col("label"), col("plabel")))
       .select(col("qid"), col("members"),
@@ -1897,10 +1869,9 @@ object Similarity {
           explode(array_distinct(concat(col("ta"), col("tm")))).as("e"))
         .select(col("qid"), col("e.node").as("node"), col("e.cos").as("cos"),
           col("e.m").as("m"))
-    var beam = Caches.register(
+    var beam = Caches.persist(
       topBoth(seedScored.select(col("qid"), col("node"), col("cos"),
-          pred(col("ln"), col("plabel")).as("m")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          pred(col("ln"), col("plabel")).as("m"))))
     // the FULL flat-tier hop budget, not the descent-discounted
     // HnswHops0: the descent seeds the walk near the query's GLOBAL
     // neighborhood, but a selective predicate's true top-10 sits past
@@ -2024,10 +1995,9 @@ object Similarity {
     // one codegen'd generator to (vec, dim, value), then an id-local
     // self-join for the upper-triangle products — end-to-end codegen
     // (an interpreted 2080-struct-per-row HOF lambda measured 2× this)
-    val flat = Caches.register(emb
+    val flat = Caches.persist(emb
       .select(col("vec_id"), posexplode(col("q")).as(Seq("pos", "v")))
-      .select(col("vec_id"), (col("pos") + 1).as("i"), col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .select(col("vec_id"), (col("pos") + 1).as("i"), col("v")))
     val pairSums = flat
       .join(flat.select(col("vec_id"), col("i").as("j"), col("v").as("w"))
         .hint("shuffle_hash"), Seq("vec_id"))

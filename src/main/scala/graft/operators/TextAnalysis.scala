@@ -298,15 +298,14 @@ object TextAnalysis {
   // — the stat_chi2 convention); the scalar distances are the
   // trivial sums of bounded columns downstream.
   def corpusDrift(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Caches.register(Tables.documents(spark, dir)
+    val counts = Caches.persist(Tables.documents(spark, dir)
       .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
       .groupBy("term")
       .agg(
         sum(when(pmod(col("doc_id"), lit(2L)) === 0L, lit(1L))
           .otherwise(lit(0L))).as("p_cnt"),
         sum(when(pmod(col("doc_id"), lit(2L)) === 1L, lit(1L))
-          .otherwise(lit(0L))).as("q_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .otherwise(lit(0L))).as("q_cnt")))
     val totals = counts.agg(sum(col("p_cnt")).as("p_tot"),
       sum(col("q_cnt")).as("q_tot"))
     val p = col("p_cnt").cast("double") / col("p_tot").cast("double")
@@ -780,8 +779,8 @@ object TextAnalysis {
   def textPerplexity(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fannedDocuments(spark, dir)
     val tokStream = docs.select(col("doc_id"), explode(toks).as("tok"))
-    val counts = Caches.register(
-      tokStream.groupBy("tok").agg(count(lit(1)).as("cnt")).persist())
+    val counts = Caches.persist(
+      tokStream.groupBy("tok").agg(count(lit(1)).as("cnt")))
     val total = counts.agg(sum(col("cnt")).cast("double").as("t"))
     val lm = counts.orderBy(col("cnt").desc, col("tok")).limit(16)
     val floorLp = log(lit(1.0) / col("t")) // OOV: count-1 smoothing floor
@@ -1481,13 +1480,12 @@ object TextAnalysis {
     * the pairing, gram-stream and determinism story. */
   private def genPairPooled(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val pairs = Caches.register(
+    val pairs = Caches.persist(
       docs.filter(pmod(col("doc_id"), lit(2L)) === 0L)
         .select(col("doc_id").as("pid"), col("lang"), col("text").as("ctext"))
         .join(docs.filter(pmod(col("doc_id"), lit(2L)) === 1L)
           .select((col("doc_id") - 1L).as("pid"), col("text").as("rtext")),
-          Seq("pid"))
-        .persist())
+          Seq("pid")))
     // ONE tagged gram stream for BOTH sides (r20, completing the r19
     // fusion): the former two per-side gram passes + full-outer clip
     // join re-aligned on (pid, g) what a single exploded stream can

@@ -25,10 +25,10 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: => DataFrame): String = {
     // Per-pin cache isolation (r20): operators persist frames (shingle
-    // caches, presortPersist), and a cache MATERIALIZED by an earlier
-    // test renders differently (CacheManager may substitute another
-    // canonically-equal plan's cached block), making operator counts
-    // order-dependent. Releasing first pins every plan in the same
+    // caches, the pre-sort Caches.persist), and a cache MATERIALIZED by
+    // an earlier test renders differently (CacheManager may substitute
+    // another canonically-equal plan's cached block), making operator
+    // counts order-dependent. Releasing first pins every plan in the same
     // fresh-cache state the bench's per-key releaseAll gives it.
     operators.Caches.releaseAll()
     withoutAQE { df.queryExecution.executedPlan.toString }
@@ -172,9 +172,9 @@ class PlanSpec extends SparkSpec {
       operators.EventAnalytics.tsInterpolate(spark, sf)
         .queryExecution.executedPlan
     }
-    // unwrap the r20 presortPersist cache: the pinned computation now
-    // lives in the top cache's cachedPlan (the outer plan is just
-    // InMemoryTableScan -> Sort)
+    // unwrap the r20 pre-sort Caches.persist cache: the pinned
+    // computation now lives in the top cache's cachedPlan (the outer
+    // plan is just InMemoryTableScan -> Sort)
     val exec = exec0.collectLeaves().collectFirst {
       case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
         if s.relation.cachedPlan.toString.contains("Window") =>

@@ -66,6 +66,32 @@ class CheckpointContractSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
+  test("Caches.persist: MEMORY_AND_DISK before releaseAll, NONE after") {
+    import org.apache.spark.storage.StorageLevel
+    val df = Caches.persist(graft.Tables.region(spark, sf)
+      .selectExpr("r_regionkey * 7 AS k"))
+    assert(df.count() > 0)
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    Caches.releaseAll()
+    assert(df.storageLevel == StorageLevel.NONE,
+      "releaseAll must unpersist every Caches.persist frame")
+  }
+
+  test("knnGraph memo is keyed per session: a new session gets its own " +
+      "frame") {
+    // a plan born on one session cannot execute on another (the
+    // Tables.load rule), so the memo must not hand the parent's frame
+    // to a child session
+    val g = Similarity.knnGraph(spark, sf)
+    val child = spark.newSession()
+    val gc = Similarity.knnGraph(child, sf)
+    assert(!(gc eq g), "a new session must not get the parent's frame")
+    assert(gc.sparkSession eq child)
+    assert(Similarity.knnGraph(child, sf) eq gc)
+    assert(gc.count() == g.count())
+    Caches.releaseAll()
+  }
+
   test("after releaseAll a held frame fails loudly — never a silent unscoped recompute") {
     val held = Relational.joinBloom(spark, sf)
     assert(held.collect().nonEmpty)
