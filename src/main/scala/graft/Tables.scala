@@ -21,12 +21,16 @@ object Tables {
     * parquet on every action) and the file index stays Spark's own
     * session-level cache. Keyed on the session too: the streaming
     * demos run child sessions, and a plan born on one session cannot
-    * execute on another. */
+    * execute on another. The memo miss is also where a session gets
+    * [[TerminalSort]]: every operator's plan starts from a load, so
+    * every session the engine is handed plans sorts the same way. */
   private val loadMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), DataFrame]
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadMemo.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    loadMemo.getOrElseUpdate((spark, dir, name), {
+      TerminalSort.install(spark)
+      spark.read.parquet(s"$dir/$name.parquet")
+    })
 
   /** Driver-side metadata scalar (a row count, a vector width) over an
     * immutable fixture dir, memoized like [[load]] and likewise kept

@@ -32,7 +32,10 @@ object Caches {
     * read it. persist, not localCheckpoint: the checkpoint variant pays
     * ~0.25 s of physical planning at CONSTRUCT (A/B'd on
     * multimodal_decode). SCALING.md §"Operator cache lifecycle" has
-    * the sf0.1 A/B that keeps it. */
+    * the sf0.1 A/B that keeps it. That A/B predates `graft.TerminalSort`:
+    * a sort whose input fits one AQE partition now runs on one
+    * partition with no sampler, so there the pre-sort persist only
+    * costs the cache write; it pays only above that size. */
   private[graft] def persist[T <: Dataset[_]](df: T): T = synchronized {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     frames += df

@@ -1103,7 +1103,9 @@ object EventAnalytics {
   // identical IEEE tree on exact ints (μ = 1 + 2ab/n,
   // σ² = 2ab(2ab−n)/(n²(n−1))), floor(z·10⁶). Scale shape: the
   // full-partition moments window, the lag window and the per-user
-  // agg all ride ONE (user_id)-hash exchange.
+  // agg all ride ONE (user_id)-hash exchange. Two selects, not one
+  // withColumn per column: each withColumn re-analyses the whole
+  // growing window plan at construct.
   def statRuns(spark: SparkSession, dir: String): DataFrame = {
     val wAll = Window.partitionBy("user_id")
     val wOrd = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1111,13 +1113,13 @@ object EventAnalytics {
       .filter(col("value").isNotNull && col("ts").isNotNull)
       .select(col("user_id"), col("ts"), col("event_id"),
         round(col("value") * 100).cast("long").as("c"))
-      .withColumn("n", count(lit(1)).over(wAll))
-      .withColumn("s", sum(col("c")).over(wAll))
-      .withColumn("pos", (col("n") * col("c") > col("s")).cast("long"))
-      .withColumn("chg",
+      .select(col("user_id"), col("ts"), col("event_id"),
+        (count(lit(1)).over(wAll) * col("c") > sum(col("c")).over(wAll))
+          .cast("long").as("pos"))
+      .select(col("user_id"), col("ts"), col("event_id"), col("pos"),
         when(lag(col("pos"), 1).over(wOrd).isNull, 1L)
           .when(lag(col("pos"), 1).over(wOrd) =!= col("pos"), 1L)
-          .otherwise(0L))
+          .otherwise(0L).as("chg"))
     val agg = base.groupBy("user_id")
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("a"),
         sum(col("chg")).as("n_runs"))

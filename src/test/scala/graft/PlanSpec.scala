@@ -1812,6 +1812,104 @@ class PlanSpec extends SparkSpec {
     assert(count(p, "Exchange rangepartitioning") === 1, p)
   }
 
+  /** The initial adaptive plan, as the mains run it (AQE on), from the
+    * same fresh-cache state as [[plan]]. Only here does `TerminalSort`
+    * act; the `withoutAQE` pins above show the at-scale sort. */
+  private def aqePlan(df: => DataFrame): String = {
+    operators.Caches.releaseAll()
+    df.queryExecution.executedPlan.toString
+  }
+
+  /** The terminal global Sort reads one coalesced partition. */
+  private def sortsOnePartition(p: String): Boolean = {
+    val lines = p.linesIterator.toSeq
+    val at = lines.indexWhere(l => l.contains("Sort [") && l.contains("], true,"))
+    at >= 0 && lines.lift(at + 1).exists(_.contains("Coalesce 1"))
+  }
+
+  test("terminal sort (AQE on): agg_group and win_lag_lead sort one " +
+      "coalesced partition — no range sampler, no range exchange") {
+    for (df <- Seq(() => operators.Relational.aggGroup(spark, sf),
+        () => operators.Analytic.winLagLead(spark, sf))) {
+      val p = aqePlan(df())
+      assert(sortsOnePartition(p), p)
+      assert(!p.contains("rangepartitioning"), p)
+    }
+    // with AQE off the rule is off: the at-scale range sort
+    assert(plan(operators.Relational.aggGroup(spark, sf))
+      .contains("Exchange rangepartitioning"))
+  }
+
+  test("terminal sort (AQE on): scan_project plans no exchange at all") {
+    val p = aqePlan(operators.Relational.scanProject(spark, sf))
+    assert(sortsOnePartition(p), p)
+    assert(!p.contains("Exchange"), p)
+  }
+
+  test("terminal sort (AQE on): join_inner_hash keeps its range exchange — " +
+      "a join's size estimate is the product of its sides") {
+    // at the benchmark's sf0.01 the product is above the 64 MB target;
+    // at sf0.001 it is below it and the rule fires
+    val p = aqePlan(operators.Relational.joinInnerHash(spark, "/root/testdata/sf0.01"))
+    assert(count(p, "Exchange rangepartitioning") === 1, p)
+    assert(!p.contains("Coalesce 1"), p)
+  }
+
+  test("terminal sort (AQE on): a computed projection above the sort " +
+      "keeps the range exchange (consumers above the sort run wide)") {
+    val p = aqePlan(operators.Relational.scanProject(spark, sf)
+      .select(col("l_orderkey"), (col("l_quantity") * 2).as("q2")))
+    assert(count(p, "Exchange rangepartitioning") === 1, p)
+    assert(!p.contains("Coalesce 1"), p)
+  }
+
+  test("terminal sort (AQE on): a sort over an explode keeps the range " +
+      "exchange — the estimate ignores a Generate's fan-out") {
+    import org.apache.spark.sql.functions.{array, explode}
+    val p = aqePlan(Tables.lineitem(spark, sf)
+      .select(col("l_orderkey"), explode(array(lit(1), lit(2))).as("x"))
+      .orderBy("l_orderkey", "x"))
+    assert(p.contains("Generate explode"), p)
+    assert(count(p, "Exchange rangepartitioning") === 1, p)
+    assert(!p.contains("Coalesce 1"), p)
+  }
+
+  test("terminal sort (AQE on): agg_group keeps its range exchange when " +
+      "the input exceeds advisoryPartitionSizeInBytes") {
+    val k = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(k)
+    spark.conf.set(k, "1")
+    val p = try aqePlan(operators.Relational.aggGroup(spark, sf))
+      finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    assert(count(p, "Exchange rangepartitioning") === 1, p)
+    assert(!p.contains("Coalesce 1"), p)
+  }
+
+  test("terminal sort: the rule leaves a streaming plan alone") {
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
+    import org.apache.spark.sql.types.IntegerType
+    val x = AttributeReference("x", IntegerType)()
+    def sorted(streaming: Boolean) = Sort(Seq(SortOrder(x, Ascending)), true,
+      LocalRelation(Seq(x), Nil, isStreaming = streaming))
+    assert(TerminalSort(sorted(streaming = false)) !== sorted(streaming = false))
+    assert(TerminalSort(sorted(streaming = true)) === sorted(streaming = true))
+  }
+
+  test("terminal sort: loads install the rule once per session, and a " +
+      "newSession() child gets its own on its first load") {
+    def installed(s: org.apache.spark.sql.SparkSession): Int =
+      s.experimental.extraOptimizations.count(_ == TerminalSort)
+    Tables.load(spark, sf, "region")
+    Tables.load(spark, sf, "nation")
+    assert(installed(spark) === 1)
+    val child = spark.newSession()
+    assert(installed(child) === 0)
+    Tables.load(child, sf, "region")
+    assert(installed(child) === 1)
+    assert(installed(spark) === 1)
+  }
+
   test("census meta: every SURVEY §2B row promising a PlanSpec pin has a " +
       "matching named PlanSpec test") {
     // The census test (GoldenSpec) stops KEY-count drift; nothing
