@@ -1,10 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The one session conf set: every main (Bench, Verify, ScaleGen and the
-  * spill and LSH harnesses) and the test session build through here, so
-  * the plan Bench times is the plan Verify checks. Callers add their own
-  * confs to the returned builder and call `getOrCreate`.
+/** The one session conf set: every main (Bench, Verify, ScaleGen) and
+  * the test session build through here, so the plan Bench times is the
+  * plan Verify checks. Callers add their own confs to the returned
+  * builder and call `getOrCreate`.
   *
   * Master: `local[cores]`, or `SPARK_GRAFT_MASTER` when set — e.g.
   * `local-cluster[2,2,2048]` runs 2 separate executor JVMs so broadcasts,
@@ -45,4 +45,19 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+
+  /** Runs `body` with the confs `kvs` set on `spark`, then restores each
+    * to its previous value (or unsets it), also when `body` throws.
+    * A conf that must be live at execution needs `body` to execute its
+    * plan, not just declare it. */
+  def withConfs[T](spark: SparkSession, kvs: Seq[(String, String)])(
+      body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

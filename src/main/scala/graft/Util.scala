@@ -27,9 +27,8 @@ object Util {
 
   /** Full JSON string escaping (backslash, quote, ALL control chars) —
     * any free text spliced into a machine-parsed single-line JSON
-    * record (Bench's error map, Verify's oracle_sql.json and manifest,
-    * SpillRehearsal's per-key error) must
-    * pass through here: a raw newline or quote from an exception
+    * record (Bench's error map, Verify's oracle_sql.json and manifest)
+    * must pass through here: a raw newline or quote from an exception
     * message would split/break the one line the driver parses. */
   def jsonEscape(s: String): String = s.flatMap {
     case '"'  => "\\\""

@@ -32,10 +32,13 @@ object Caches {
     * read it. persist, not localCheckpoint: the checkpoint variant pays
     * ~0.25 s of physical planning at CONSTRUCT (A/B'd on
     * multimodal_decode). SCALING.md §"Operator cache lifecycle" has
-    * the sf0.1 A/B that keeps it. That A/B predates `graft.TerminalSort`:
-    * a sort whose input fits one AQE partition now runs on one
-    * partition with no sampler, so there the pre-sort persist only
-    * costs the cache write; it pays only above that size. */
+    * the sf0.1 A/B that keeps it. Below `graft.TerminalSort`'s gate no
+    * sampler runs, yet the persist still acts: the cache is a stage
+    * boundary that keeps the stage under the sort at AQE width (the
+    * rule's non-shuffling `Coalesce(1)` would pull it into one task),
+    * and its materialized size lets the rule fire on warm passes. Where
+    * that stage is one task anyway it only costs the cache write
+    * (SCALING.md §"Pre-sort persist below the TerminalSort gate"). */
   private[graft] def persist[T <: Dataset[_]](df: T): T = synchronized {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     frames += df

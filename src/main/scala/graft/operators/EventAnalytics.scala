@@ -1103,9 +1103,10 @@ object EventAnalytics {
   // identical IEEE tree on exact ints (μ = 1 + 2ab/n,
   // σ² = 2ab(2ab−n)/(n²(n−1))), floor(z·10⁶). Scale shape: the
   // full-partition moments window, the lag window and the per-user
-  // agg all ride ONE (user_id)-hash exchange. Two selects, not one
+  // agg all ride ONE (user_id)-hash exchange. Selects, not one
   // withColumn per column: each withColumn re-analyses the whole
-  // growing window plan at construct.
+  // growing window plan at construct. The lag is named once (`prev`):
+  // spelled twice inside the CASE it planned as two window functions.
   def statRuns(spark: SparkSession, dir: String): DataFrame = {
     val wAll = Window.partitionBy("user_id")
     val wOrd = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1117,8 +1118,10 @@ object EventAnalytics {
         (count(lit(1)).over(wAll) * col("c") > sum(col("c")).over(wAll))
           .cast("long").as("pos"))
       .select(col("user_id"), col("ts"), col("event_id"), col("pos"),
-        when(lag(col("pos"), 1).over(wOrd).isNull, 1L)
-          .when(lag(col("pos"), 1).over(wOrd) =!= col("pos"), 1L)
+        lag(col("pos"), 1).over(wOrd).as("prev"))
+      .select(col("user_id"), col("ts"), col("event_id"), col("pos"),
+        when(col("prev").isNull, 1L)
+          .when(col("prev") =!= col("pos"), 1L)
           .otherwise(0L).as("chg"))
     val agg = base.groupBy("user_id")
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("a"),

@@ -335,16 +335,11 @@ object Layout {
     val rows = Tables.scalar(spark, dir, "lineitemRows")(
       Tables.lineitem(spark, dir).count())
     val advisory = math.max(8192L, rows * 10L / 8)
-    val keys = Map(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> advisory / 2)
-    val prev = keys.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    keys.foreach { case (k, v) => spark.conf.set(k, v.toString) }
-    try rebalFrame(spark, dir).write.mode("overwrite").parquet(path)
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    graft.Session.withConfs(spark, Seq(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+          (advisory / 2).toString))(
+      rebalFrame(spark, dir).write.mode("overwrite").parquet(path))
     spark.read.parquet(path)
       .orderBy("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
   }

@@ -378,8 +378,8 @@ object Relational {
     * local-mode data (the defaults gate on >10 GB application-side
     * scans), restored after `body` EXECUTES (not just declares) its
     * plan. Shared with PlanSpec's injection assertion. */
-  private[graft] def withBloomConf[T](spark: SparkSession)(body: => T): T = {
-    val scoped = Seq(
+  private[graft] def withBloomConf[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark, Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB",
@@ -388,15 +388,7 @@ object Relational {
       // threshold → no bloom). At 100 TB neither side broadcasts; at
       // local sf the dim is tiny, so model the cluster condition by
       // disabling size-based broadcast inside the scope.
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   // `cbo_reorder` — the cost-based optimizer end-to-end: managed
   // tables + ANALYZE TABLE statistics + spark.sql.cbo join reordering.
@@ -466,18 +458,10 @@ object Relational {
 
   /** Scoped CBO confs (stats-fed join reorder), restored after `body`
     * EXECUTES its plan. Shared with PlanSpec's reorder assertion. */
-  private[graft] def withCboConf[T](spark: SparkSession)(body: => T): T = {
-    val scoped = Seq(
+  private[graft] def withCboConf[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark, Seq(
       "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true")
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.cbo.joinReorder.enabled" -> "true"))(body)
 
   // `sql_variables` — Spark 4 session variables + EXECUTE IMMEDIATE:
   // the dynamic-SQL/stored-procedure surface (DECLARE VARIABLE, SET
@@ -624,23 +608,15 @@ object Relational {
     * applies to shuffle joins — the tiny local dim would otherwise
     * broadcast and dissolve the demonstration (at 100 TB neither side
     * broadcasts). */
-  private[graft] def withSkewConf[T](spark: SparkSession)(body: => T): T = {
-    val scoped = Seq(
+  private[graft] def withSkewConf[T](spark: SparkSession)(body: => T): T =
+    graft.Session.withConfs(spark, Seq(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   // Q12 `agg_group` — TPC-H Q1 shape: grouped sum/avg/min/max/count with
   // automatic partial+final aggregation (reference analogue: the scalar

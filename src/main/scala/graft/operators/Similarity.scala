@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -47,13 +47,66 @@ object Similarity {
   private val K = 10        // neighbours per probe
   private val NProbes = 10  // probe vectors: vec_id < 10
 
+  // ------------------------------------------------------------------
+  // Building blocks: every sim_*/embed_* key and out-of-sample entry
+  // composes these, so each rule below has exactly one definition.
+  // ------------------------------------------------------------------
+
+  /** The score every tier ranks on: the native codegen'd CosineSim
+    * (one fused loop per pair, numerics identical to [[dot]]/[[l2norm]])
+    * rounded to 4 dp BEFORE ranking, so Spark and the DuckDB oracle rank
+    * identically despite last-ulp summation differences. */
+  private def cos4(a: Column, b: Column): Column =
+    round(graft.functions.CosineSim.cosineSim(a, b), 4)
+
+  /** The standard probes (vec_id < [[NProbes]]) of a corpus frame as
+    * (`id`, `e`, `carry`…). */
+  private def probesOf(df: DataFrame, id: String, e: String,
+      carry: Column*): DataFrame =
+    df.filter(col("vec_id") < NProbes)
+      .select(Seq(col("vec_id").as(id), col("embedding").as(e)) ++ carry: _*)
+
+  // The RANKING RULE the oracle replays: score descending, ties to the
+  // smaller id. It has two physical forms — a window (the exact and IVF
+  // tiers) and an array_sort comparator (caps inside an aggregation, no
+  // window sort: the graph build and search tiers).
+
+  /** The ranking rule as a window order within `part`. */
+  private def ranked(part: String, score: String, id: String): WindowSpec =
+    Window.partitionBy(part).orderBy(col(score).desc, col(id))
+
+  /** The rows ranked 1..`k` per `part`; the caller's projection drops
+    * the rank column `rn`. */
+  private[operators] def windowTopK(df: DataFrame, part: String,
+      score: String, id: String, k: Int, rn: String = "rn"): DataFrame =
+    df.withColumn(rn, row_number().over(ranked(part, score, id)))
+      .filter(col(rn) <= k)
+
+  /** The best `k` of a group's `elem` structs (fields `cos` and `id`)
+    * under the ranking rule — an aggregate; collect_list skips nulls, so
+    * a `when(...)` elem collects a filtered subset. */
+  private def topByCos(elem: Column, id: String, k: Int): Column =
+    slice(array_sort(collect_list(elem), (l, r) =>
+      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
+        .when(l(id) < r(id), -1).when(l(id) > r(id), 1).otherwise(0)),
+      1, k)
+
+  /** Per-probe top-[[K]] of a (`probe_id`, `cand_id`, `cosine`, `carry`…)
+    * frame — the output of the exact and IVF tiers. */
+  private def probeTopK(scored: DataFrame, carry: String*): DataFrame =
+    windowTopK(scored, "probe_id", "cosine", "cand_id", K)
+      .select(("probe_id" +: "cand_id" +: carry :+ "cosine").map(col): _*)
+      .orderBy("probe_id", "cand_id")
+
+  /** The md5-derived draw in [0, `mod`): hex digits 1–12 of
+    * md5("`tag``id`:`i`") — deterministic, no RNG state, replayable by
+    * any engine. */
+  private def md5Draw(tag: String, id: Column, i: Column, mod: Column): Column =
+    pmod(conv(substring(md5(concat(lit(tag), id, lit(":"), i)), 1, 12), 16, 10)
+      .cast("long"), mod)
+
   // Q39 `sim_topk` — exact cosine top-10 for each of the 10 probe
-  // vectors over all other embeddings. The scoring inner loop is the
-  // native codegen'd CosineSim expression (one fused loop per pair, no
-  // zipped intermediate array — graft.functions.CosineSim); numerics
-  // are identical to the zip_with+aggregate formulation. round(·,4)
-  // before ranking so Spark and the oracle rank identically despite
-  // last-ulp summation differences; ties broken by cand_id.
+  // vectors over all other embeddings, ranked by the ranking rule.
   //
   // The scoring call goes through the SQL FUNCTION REGISTRY
   // (`expr("cosine_sim(...)")` after CosineSim.register) rather than
@@ -64,19 +117,11 @@ object Similarity {
   def simTopk(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.CosineSim.register(spark)
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val probes = broadcast(
-      emb.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
-    val scored = emb.join(probes, col("probe_id") =!= col("vec_id"))
+    val probes = broadcast(probesOf(emb, "probe_id", "pe"))
+    probeTopK(emb.join(probes, col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("cand_id"),
         round(expr("cosine_sim(pe, embedding)"), 4)
-          .as("cosine"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select("probe_id", "cand_id", "cosine")
-      .orderBy("probe_id", "cand_id")
+          .as("cosine")))
   }
 
   // `sim_filtered` — FILTERED vector search (r16): top-k restricted to
@@ -100,21 +145,12 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"))
     val probes = broadcast(
-      emb.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-          col("label").as("plabel")))
-    val scored = emb
+      probesOf(emb, "probe_id", "pe", col("label").as("plabel")))
+    probeTopK(emb
       .join(probes,
         col("probe_id") =!= col("vec_id") && col("label") === col("plabel"))
       .select(col("probe_id"), col("vec_id").as("cand_id"), col("label"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("embedding")), 4)
-          .as("cosine"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select("probe_id", "cand_id", "label", "cosine")
-      .orderBy("probe_id", "cand_id")
+        cos4(col("pe"), col("embedding")).as("cosine")), "label")
   }
 
   // `dq_embedding` — embedding data-quality profile (r16): the checks
@@ -159,16 +195,9 @@ object Similarity {
   private[operators] def bruteTopkFor(spark: SparkSession, dir: String,
       probes: DataFrame): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val scored = emb.join(broadcast(probes), col("probe_id") =!= col("vec_id"))
+    probeTopK(emb.join(broadcast(probes), col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("embedding")), 4)
-          .as("cosine"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select("probe_id", "cand_id", "cosine")
-      .orderBy("probe_id", "cand_id")
+        cos4(col("pe"), col("embedding")).as("cosine")))
   }
 
   // `dedup_embedding` — embedding-cosine pair detection: every vector
@@ -230,8 +259,7 @@ object Similarity {
       .select(
         least(col("id_a"), col("id_b")).as("vec_a"),
         greatest(col("id_a"), col("id_b")).as("vec_b"),
-        round(graft.functions.CosineSim.cosineSim(col("ea"), col("eb")), 4)
-          .as("cosine"))
+        cos4(col("ea"), col("eb")).as("cosine"))
       .filter(col("cosine") >= 0.4)
       .orderBy("vec_a", "vec_b")
   }
@@ -257,8 +285,7 @@ object Similarity {
         .select(col("vec_id").cast("int").as("cid"), col("embedding").as("ce")))
     emb.crossJoin(cents)
       .select(col("vec_id"), col("cid"),
-        round(graft.functions.CosineSim.cosineSim(col("ce"), col("embedding")), 4)
-          .as("cos"))
+        cos4(col("ce"), col("embedding")).as("cos"))
       .groupBy("vec_id")
       .agg(max(struct(col("cos"), (-col("cid")).as("ncid"))).as("best"))
       .select(col("vec_id"), (-col("best.ncid")).as("cluster_id"),
@@ -353,52 +380,59 @@ object Similarity {
   private[operators] def ivfListSizes(spark: SparkSession, dir: String): Seq[Long] =
     ivfIndex(spark, dir)._2.groupBy("list_id").count()
       .orderBy("list_id").collect().map(_.getLong(1)).toSeq
-  def simAnn(spark: SparkSession, dir: String): DataFrame = {
-    val (cents, listed) = ivfIndex(spark, dir)
-
-    // Centroid table: k×dim — tiny, broadcast. Served from the
-    // committed index (the trained model's weights as a table).
-    val centroids = broadcast(cents)
-
-    // Each probe ranks centroids and keeps its NProbe nearest lists —
-    // by the SAME metric k-means assigned candidates with (Euclidean):
-    // argmin ‖p−c‖² = argmin(‖c‖² − 2·p·c), ‖p‖² constant per probe.
-    // Ranking by raw dot product alone would reorder lists whose
-    // centroid norms differ (tight vs diffuse clusters) and probe the
-    // wrong lists.
-    val probes = listed.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+  /** Each probe's `nprobe` nearest IVF lists as a broadcast
+    * (`probe_id`, `pe`, `list_id`) frame — by the SAME metric k-means
+    * assigned candidates with (Euclidean): argmin ‖p−c‖² =
+    * argmin(‖c‖² − 2·p·c), ‖p‖² constant per probe. Ranking by raw dot
+    * product alone would reorder lists whose centroid norms differ
+    * (tight vs diffuse clusters) and probe the wrong lists. The
+    * centroid table is k×dim — tiny, broadcast, served from the
+    * committed index (the trained model's weights as a table). */
+  private def probeLists(probes: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame = {
     val cn2 = aggregate(col("centroid"), lit(0.0), (acc, x) => acc + x * x)
     val wc = Window.partitionBy("probe_id")
       .orderBy(col("cdist").asc, col("list_id"))
-    val probeLists = broadcast(
-      probes.crossJoin(centroids)
+    broadcast(
+      probes.crossJoin(broadcast(cents))
         .withColumn("cdist", cn2 - lit(2.0) * dot(col("pe"), col("centroid")))
         .withColumn("crn", row_number().over(wc))
-        .filter(col("crn") <= NProbe)
+        .filter(col("crn") <= nprobe)
         .select("probe_id", "pe", "list_id"))
-
-    // Score only candidates in probed lists (broadcast-hash join on the
-    // list id), then per-probe top-k. Scoring uses the native codegen'd
-    // CosineSim expression (same numerics as the HOF formulation).
-    val scored = listed.join(probeLists, Seq("list_id"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("embedding")), 4)
-          .as("cosine"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select("probe_id", "cand_id", "cosine")
-      .orderBy("probe_id", "cand_id")
   }
 
+  def simAnn(spark: SparkSession, dir: String): DataFrame = {
+    val (cents, listed) = ivfIndex(spark, dir)
+    // Score only candidates in probed lists (broadcast-hash join on the
+    // list id), then per-probe top-k.
+    probeTopK(listed
+      .join(probeLists(probesOf(listed, "probe_id", "pe"), cents, NProbe),
+        Seq("list_id"))
+      .filter(col("probe_id") =!= col("vec_id"))
+      .select(col("probe_id"), col("vec_id").as("cand_id"),
+        cos4(col("pe"), col("embedding")).as("cosine")))
+  }
+
+  // The int8 quantizer (`embed_quantize` and the code tier of `sim_pq`
+  // and `sim_ivfpq`): per-vector scale = max|xᵢ|, code
+  // qᵢ = round(xᵢ/scale·127).
+
+  /** Per-vector quantizer scale: max|xᵢ|. */
+  private def absMax(e: Column): Column =
+    array_max(transform(e, v => abs(v.cast("double"))))
+
+  /** One element's int8 code. A zero vector (scale = 0) quantizes to
+    * all-zero codes in BOTH engines — without the guard Spark's
+    * 0/0 → NaN non-ANSI-casts to 0 while DuckDB's CAST(NaN) errors
+    * (engine-divergent). */
+  private def int8(v: Column, scale: Column): Column =
+    when(scale === 0.0, lit(0))
+      .otherwise(round(v.cast("double") / scale * 127, 0).cast("int"))
+
   // `embed_quantize` — symmetric int8 quantization of the embedding
-  // store (per-vector scale = max|xᵢ|, code qᵢ = round(xᵢ/scale·127)):
-  // the standard 4×-shrink for a billion-vector ANN shortlist tier
-  // (float32 → int8; rerank the shortlist at full precision). Map-only
-  // expression work over one scan — no shuffle, no UDF.
+  // store: the standard 4×-shrink for a billion-vector ANN shortlist
+  // tier (float32 → int8; rerank the shortlist at full precision).
+  // Map-only expression work over one scan — no shuffle, no UDF.
   //
   // Oracle exactness: xᵢ/scale·127 is the same left-to-right double
   // expression in both engines over identical float inputs — no
@@ -409,17 +443,9 @@ object Similarity {
   def embedQuantize(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
-        array_max(transform(col("embedding"), v => abs(v.cast("double"))))
-          .as("scale"))
+        absMax(col("embedding")).as("scale"))
       .select(col("vec_id"), col("scale"),
-        // a zero vector (scale = 0) quantizes to all-zero codes in BOTH
-        // engines — without the guard Spark's 0/0 → NaN non-ANSI-casts
-        // to 0 while DuckDB's CAST(NaN) errors (engine-divergent)
-        transform(col("embedding"),
-          v => when(col("scale") === 0.0, lit(0))
-            .otherwise(round(v.cast("double") / col("scale") * 127, 0)
-              .cast("int")))
-          .as("q"))
+        transform(col("embedding"), v => int8(v, col("scale"))).as("q"))
       .select(col("vec_id"),
         round(col("scale"), 4).as("scale_r"),
         size(col("q")).cast("long").as("n_dims"),
@@ -531,49 +557,46 @@ object Similarity {
   // SimilaritySpec additionally pins recall@10 vs the exact sim_topk
   // baseline at ≥ 0.9 — the number that justifies the 4× IO cut.
   private val ShortList = 100
+
+  /** The code table the shortlist scan reads: `keep` columns + float
+    * int8 codes `qf` (int8 values are float-exact — the CosineSim input).
+    * The full vector deliberately does not travel with the shortlist
+    * scan (at scale it lives in a separate 4×-larger store the rerank
+    * join fetches from). */
+  private def pqCodes(df: DataFrame, keep: String*): DataFrame = {
+    val ks = keep.map(col)
+    df.select(ks :+ col("embedding") :+ absMax(col("embedding")).as("scale"): _*)
+      .select(ks :+ transform(col("embedding"),
+        v => int8(v, col("scale")).cast("float")).as("qf"): _*)
+  }
+
+  /** Shortlist → exact rerank over probe × code candidates (`probe_id`,
+    * `pe`, `vec_id`, `qf`): quantized asymmetric scoring keeps the
+    * per-probe top-[[ShortList]], whose ≤100 rows per probe fetch their
+    * full vectors from `emb` (`vec_id`, `embedding`) and rerank exactly
+    * to the top-[[K]]. */
+  private def shortlistRerank(cands: DataFrame, emb: DataFrame): DataFrame = {
+    val short = cands
+      .select(col("probe_id"), col("pe"), col("vec_id").as("cand_id"),
+        cos4(col("pe"), col("qf")).as("qscore"))
+    val shortlist =
+      windowTopK(short, "probe_id", "qscore", "cand_id", ShortList, "srn")
+        .select("probe_id", "pe", "cand_id")
+    probeTopK(shortlist
+      .join(emb.select(col("vec_id").as("cand_id"), col("embedding")),
+        Seq("cand_id"))
+      .select(col("probe_id"), col("cand_id"),
+        cos4(col("pe"), col("embedding")).as("cosine")))
+  }
+
   def simPq(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.CosineSim.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    // the code table: (vec_id, q) ONLY — the full vector deliberately
-    // does not travel with the shortlist scan (at scale it lives in a
-    // separate 4×-larger store the rerank join fetches from)
-    val codes = emb
-      .select(col("vec_id"), col("embedding"),
-        array_max(transform(col("embedding"), v => abs(v.cast("double"))))
-          .as("scale"))
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          v => when(col("scale") === 0.0, lit(0))
-            .otherwise(round(v.cast("double") / col("scale") * 127, 0)
-              .cast("int"))
-            .cast("float"))
-          .as("qf"))
-    val probes = broadcast(
-      emb.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
-    val short = codes.join(probes, col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("pe"), col("vec_id").as("cand_id"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("qf")), 4)
-          .as("qscore"))
-    val ws = Window.partitionBy("probe_id")
-      .orderBy(col("qscore").desc, col("cand_id"))
-    val shortlist = short.withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= ShortList)
-      .select("probe_id", "pe", "cand_id")
-    // rerank fetch: 100 rows per probe join back to full precision
-    val reranked = shortlist
-      .join(emb.select(col("vec_id").as("cand_id"), col("embedding")),
-        Seq("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("embedding")), 4)
-          .as("cosine"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    reranked.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select("probe_id", "cand_id", "cosine")
-      .orderBy("probe_id", "cand_id")
+    val probes = broadcast(probesOf(emb, "probe_id", "pe"))
+    shortlistRerank(
+      pqCodes(emb, "vec_id").join(probes, col("probe_id") =!= col("vec_id")),
+      emb)
   }
 
   // `sim_ivfpq` — the two ANN tiers COMPOSED (VERDICT r14 item 4): IVF
@@ -604,9 +627,7 @@ object Similarity {
   private val NProbePq = 16
   def simIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (_, listed) = ivfIndex(spark, dir)
-    ivfPqFor(spark, dir,
-      listed.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
+    ivfPqFor(spark, dir, probesOf(listed, "probe_id", "pe"))
   }
 
   /** IVFPQ search for an ARBITRARY probe frame (`probe_id`, `pe`) —
@@ -617,56 +638,14 @@ object Similarity {
   private[operators] def ivfPqFor(spark: SparkSession, dir: String,
       probes: DataFrame): DataFrame = {
     val (cents, listed) = ivfIndex(spark, dir)
-    // code table WITH the list id: (vec_id, list_id, qf) — the
-    // embed_quantize formulation; the full vector deliberately does
-    // not travel with the shortlist scan
-    val codes = listed
-      .select(col("vec_id"), col("list_id"), col("embedding"),
-        array_max(transform(col("embedding"), v => abs(v.cast("double"))))
-          .as("scale"))
-      .select(col("vec_id"), col("list_id"),
-        transform(col("embedding"),
-          v => when(col("scale") === 0.0, lit(0))
-            .otherwise(round(v.cast("double") / col("scale") * 127, 0)
-              .cast("int"))
-            .cast("float"))
-          .as("qf"))
-    val centroids = broadcast(cents)
-    val cn2 = aggregate(col("centroid"), lit(0.0), (acc, x) => acc + x * x)
-    val wc = Window.partitionBy("probe_id")
-      .orderBy(col("cdist").asc, col("list_id"))
-    val probeLists = broadcast(
-      probes.crossJoin(centroids)
-        .withColumn("cdist", cn2 - lit(2.0) * dot(col("pe"), col("centroid")))
-        .withColumn("crn", row_number().over(wc))
-        .filter(col("crn") <= NProbePq)
-        .select("probe_id", "pe", "list_id"))
-    // tier 1: quantized asymmetric scoring, probed lists only
-    // (broadcast-hash join on the list id — the candidate side never
-    // shuffles); the hot loop is the native codegen'd CosineSim
-    val short = codes.join(probeLists, Seq("list_id"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .select(col("probe_id"), col("pe"), col("vec_id").as("cand_id"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("qf")), 4)
-          .as("qscore"))
-    val ws = Window.partitionBy("probe_id")
-      .orderBy(col("qscore").desc, col("cand_id"))
-    val shortlist = short.withColumn("srn", row_number().over(ws))
-      .filter(col("srn") <= ShortList)
-      .select("probe_id", "pe", "cand_id")
-    // tier 2: exact rerank — ≤100 full-precision fetches per probe
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("cand_id"), col("embedding"))
-    val reranked = shortlist.join(emb, Seq("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(graft.functions.CosineSim.cosineSim(col("pe"), col("embedding")), 4)
-          .as("cosine"))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(col("cosine").desc, col("cand_id"))
-    reranked.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .select("probe_id", "cand_id", "cosine")
-      .orderBy("probe_id", "cand_id")
+    // tier 1 reads probed lists only (broadcast-hash join on the list
+    // id — the candidate side never shuffles); tier 2 fetches ≤100
+    // full-precision vectors per probe
+    shortlistRerank(
+      pqCodes(listed, "vec_id", "list_id")
+        .join(probeLists(probes, cents, NProbePq), Seq("list_id"))
+        .filter(col("probe_id") =!= col("vec_id")),
+      Tables.embeddings(spark, dir))
   }
 
   // `sim_nndescent` — k-NN GRAPH construction via NN-Descent (Dong,
@@ -809,14 +788,16 @@ object Similarity {
       }
     }
 
-  def simNndescent(spark: SparkSession, dir: String): DataFrame = {
-    val graph = knnGraph(spark, dir)
-    val wk = Window.partitionBy("v").orderBy(col("cos").desc, col("w"))
-    graph.filter(col("v") < NProbes)
-      .withColumn("rn", row_number().over(wk)).filter(col("rn") <= K)
-      .select(col("v").as("probe_id"), col("w").as("cand_id"), col("cos").as("cosine"))
+  /** Top-[[K]] out-edges of the `probes`-selected vertices of a (v, w,
+    * cos) graph as the (`probe_id`, `cand_id`, `cosine`) output. */
+  private def graphTopK(graph: DataFrame, probes: Column): DataFrame =
+    windowTopK(graph.filter(probes), "v", "cos", "w", K)
+      .select(col("v").as("probe_id"), col("w").as("cand_id"),
+        col("cos").as("cosine"))
       .orderBy("probe_id", "cand_id")
-  }
+
+  def simNndescent(spark: SparkSession, dir: String): DataFrame =
+    graphTopK(knnGraph(spark, dir), col("v") < NProbes)
 
   // `sim_index_refresh` — INCREMENTAL index maintenance (r16): the
   // committed-index story is incomplete if corpus growth forces a full
@@ -870,14 +851,8 @@ object Similarity {
   def simIndexRefresh(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"))
     val n0 = emb.count() * 9 / 10
-    val graph = refreshedGraph(spark, dir)
-    val wk = Window.partitionBy("v").orderBy(col("cos").desc, col("w"))
-    graph.filter(col("v") < NProbes ||
-        (col("v") >= n0 && col("v") < n0 + NProbes))
-      .withColumn("rn", row_number().over(wk)).filter(col("rn") <= K)
-      .select(col("v").as("probe_id"), col("w").as("cand_id"),
-        col("cos").as("cosine"))
-      .orderBy("probe_id", "cand_id")
+    graphTopK(refreshedGraph(spark, dir), col("v") < NProbes ||
+      (col("v") >= n0 && col("v") < n0 + NProbes))
   }
 
   // `sim_index_delete` — the RETENTION/GDPR path of the maintained
@@ -946,15 +921,10 @@ object Similarity {
     // both tiers must forget: materialize (and commit) the post-delete
     // inverted file alongside the repaired graph
     ivfListsDeleted(spark, dir)
-    val graph = deletedGraph(spark, dir)
-    val wk = Window.partitionBy("v").orderBy(col("cos").desc, col("w"))
     // probes: the live ids of the first 2·NProbes — wide enough to
     // include vertices damaged by the delete (id 7's ex-neighbors)
-    graph.filter(col("v") < 2 * NProbes && !tombstoned(col("v")))
-      .withColumn("rn", row_number().over(wk)).filter(col("rn") <= K)
-      .select(col("v").as("probe_id"), col("w").as("cand_id"),
-        col("cos").as("cosine"))
-      .orderBy("probe_id", "cand_id")
+    graphTopK(deletedGraph(spark, dir),
+      col("v") < 2 * NProbes && !tombstoned(col("v")))
   }
 
   /** Full k-NN graph build (NN-Descent): directed top-[[GraphK]] edges
@@ -998,12 +968,6 @@ object Similarity {
     // pattern) — vec_ids are dense 0..n-1 in this corpus
     val n = emb.count()
     val kDeg = graphKFor(n) // scale-aware build degree (see graphKFor)
-    // deterministic desc-by-cos, asc-by-id comparator for array_sort —
-    // the sim_topk ranking convention, applied inside the agg so the
-    // per-vertex cap never needs a window sort
-    val byCosDesc = (l: Column, r: Column) =>
-      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
-        .when(l("w") < r("w"), -1).when(l("w") > r("w"), 1).otherwise(0)
     // SHUFFLE_HASH on the embedding joins: the round frames are
     // stat-less localCheckpoint outputs, so the CBO would sort-merge
     // everything (the graph_kcore lesson) — and broadcast would be
@@ -1067,9 +1031,7 @@ object Similarity {
     val randomInit = initVerts.select(col("vec_id").as("v"),
         explode(sequence(lit(randFrom),
           col("n_init").cast("int") - 1)).as("i"))
-      .select(col("v"),
-        pmod(conv(substring(md5(concat(lit("nnd:"), col("v"), lit(":"),
-          col("i"))), 1, 12), 16, 10).cast("long"), lit(n)).as("w"))
+      .select(col("v"), md5Draw("nnd:", col("v"), col("i"), lit(n)).as("w"))
     val initPairs = seedDir match {
       // kDeg ≥ GraphK = 20, so halfK ≥ 10 and sequence(0, halfK - 1)
       // never runs descending
@@ -1092,9 +1054,7 @@ object Similarity {
       .filter(col("v") =!= col("w")).distinct()
       .join(embV.hint("shuffle_hash"), Seq("v"))
       .join(embW.hint("shuffle_hash"), Seq("w"))
-      .select(col("v"), col("w"),
-        round(graft.functions.CosineSim.cosineSim(col("ev"), col("ew")), 4)
-          .as("cos"),
+      .select(col("v"), col("w"), cos4(col("ev"), col("ew")).as("cos"),
         lit(true).as("freshF"), lit(true).as("freshR"),
         lit(true).as("isNew"))
     val init = warmStart match {
@@ -1113,7 +1073,8 @@ object Similarity {
     // frames keep the schema the committed builds were made with.
     // merge → dedupe → top-k in ONE exchange: hash partitioning on v
     // satisfies both the (v,w) and the (v) clustering, so the pair-level
-    // max/min agg and the per-vertex array cap share the repartition
+    // max/min agg and the per-vertex array cap (the ranking rule inside
+    // the agg — no window sort) share the repartition
     def topK(edges: DataFrame, k: Int): DataFrame =
       edges.repartition(col("v"))
         .groupBy(col("v"), col("w"))
@@ -1124,11 +1085,9 @@ object Similarity {
           min(struct(col("isNew"), col("freshF"), col("freshR")))
             .as("st"))
         .groupBy(col("v"))
-        .agg(slice(array_sort(
-          collect_list(struct(col("cos"), col("w"),
+        .agg(topByCos(struct(col("cos"), col("w"),
             col("st.freshF").as("freshF"), col("st.freshR").as("freshR"),
-            col("st.isNew").as("isNew"))),
-          byCosDesc), 1, k).as("top"))
+            col("st.isNew").as("isNew")), "w", k).as("top"))
         .select(col("v"), explode(col("top")).as("e"))
         .select(col("v"), col("e.w").as("w"), col("e.cos").as("cos"),
           col("e.freshF").as("freshF"), col("e.freshR").as("freshR"),
@@ -1181,9 +1140,8 @@ object Similarity {
         .agg(max(col("cos")).as("cos"), max(col("fresh")).as("fresh"),
           first(col("ew")).as("ew"))
         .groupBy(col("v"))
-        .agg(slice(array_sort(
-          collect_list(struct(col("cos"), col("w"), col("fresh"), col("ew"))),
-          byCosDesc), 1, 2 * kDeg).as("members"))
+        .agg(topByCos(struct(col("cos"), col("w"), col("fresh"), col("ew")),
+          "w", 2 * kDeg).as("members"))
       // each unordered neighbor pair once via positional explode; score
       // in place over the carried vectors; the incremental rule is the
       // paper's new × (new ∪ old) at ρ=1: a pair participates iff one
@@ -1195,8 +1153,7 @@ object Similarity {
             .as("b"))
         .filter(col("a.fresh") || col("b.fresh"))
         .select(col("a.w").as("v"), col("b.w").as("w"),
-          round(graft.functions.CosineSim.cosineSim(col("a.ew"), col("b.ew")), 4)
-            .as("cos"))
+          cos4(col("a.ew"), col("b.ew")).as("cos"))
       // both directions, merged with the current edges; every current
       // edge has gossiped at both pivots this round, so its flags clear
       // (the paper's sampled→false clear at ρ=1); candidates enter
@@ -1269,11 +1226,68 @@ object Similarity {
     math.max(1, math.min(spark.sparkContext.defaultParallelism, NProbes))
   private val Hops = 4   // fixed expansion rounds
   private val Seeds = 4  // md5-derived entry points per query
+
+  // The BEAM KERNEL — one definition shared by the flat walk
+  // (graphSearchFor), the HNSW descent (hnswDescend) and the filtered
+  // walk (filteredGraphSearchFor). The descent hands its last beam to
+  // the layer-0 walk as an already-scored round-0 beam, which is only
+  // valid because both score and cap with these same functions.
+
+  /** (`qid`, `node`) pairs scored against the broadcast query vectors
+    * (`probes`: `qid`, `qe`, …) as (`qid`, `node`, `carry`…, `cos`);
+    * `embN` is the corpus as (`node`, `ne`, …). The NODE SET is
+    * broadcast, never the corpus: a seed/beam frame is ≤ queries·Beam
+    * rows by construction (the sim_topk small-side argument), so the
+    * corpus scan stays map-side with ZERO shuffle. The first version
+    * shuffle_hash'd the corpus side instead — at mult-100 that
+    * re-shuffled the whole 2.4 GB index EVERY hop (measured: ~790 s
+    * warm + an executor OOM retry vs ~3 s with the beam broadcast). */
+  private def scoreNodes(embN: DataFrame, probes: DataFrame,
+      nodes: DataFrame, carry: Column*): DataFrame =
+    embN.join(broadcast(nodes), Seq("node"))
+      .join(probes, Seq("qid"))
+      .select(Seq(col("qid"), col("node")) ++ carry :+
+        cos4(col("qe"), col("ne")).as("cos"): _*)
+
+  /** Dedupe multi-path hits (cos is deterministic per (qid, node)),
+    * then keep the best `b` per query under the ranking rule — dedupe
+    * and cap share ONE exchange (hash partitioning on qid satisfies
+    * both the (qid, node) and the (qid) clustering, and the cap is an
+    * array_sort inside the agg, not a window sort). */
+  private[operators] def topB(spark: SparkSession, df: DataFrame,
+      b: Int): DataFrame =
+    df.repartition(qidParts(spark), col("qid"))
+      .groupBy(col("qid"), col("node")).agg(max(col("cos")).as("cos"))
+      .groupBy(col("qid"))
+      .agg(topByCos(struct(col("cos"), col("node")), "node", b).as("top"))
+      .select(col("qid"), explode(col("top")).as("e"))
+      .select(col("qid"), col("e.node").as("node"), col("e.cos").as("cos"))
+
+  /** [[Seeds]] md5-random entry nodes per query (`qid`, `node`). */
+  private def randomSeeds(probes: DataFrame, n: Long): DataFrame =
+    probes.select(col("qid"),
+        explode(sequence(lit(0), lit(Seeds - 1))).as("i"))
+      .select(col("qid"), md5Draw("gs:", col("qid"), col("i"), lit(n)).as("node"))
+
+  /** One hop: the beam's neighbours in the search adjacency `adjE`,
+    * joined to their queries. The beam side broadcasts (≤ queries·Beam
+    * rows), so the resident index is scanned map-side once per hop,
+    * never shuffled. */
+  private def frontierOf(adjE: DataFrame, probes: DataFrame,
+      beam: DataFrame): DataFrame =
+    adjE.join(broadcast(beam.select(col("qid"), col("node").as("v"))),
+        Seq("v"))
+      .join(probes, Seq("qid"))
+
+  /** A frontier's neighbours scored against their query as (`qid`,
+    * `node`, `cos`, `tag`…). */
+  private def scoreFrontier(frontier: DataFrame, tag: Column*): DataFrame =
+    frontier.select(Seq(col("qid"), col("w").as("node"),
+      cos4(col("qe"), col("ew")).as("cos")) ++ tag: _*)
+
   def simGraphSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    graphSearchFor(spark, dir,
-      emb.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe")))
+    graphSearchFor(spark, dir, probesOf(emb, "qid", "qe"))
   }
 
   /** Corpus size for the seed-draw modulus — a bounded driver scalar
@@ -1345,36 +1359,6 @@ object Similarity {
     val probes = broadcast(probes0)
     val embN = emb.select(col("vec_id").as("node"), col("embedding").as("ne"))
     val adjE = searchAdj(spark, dir)
-    // (qid, node) → scored against the query vector. The NODE SET is
-    // broadcast, never the corpus: a seed/beam frame is ≤ queries·Beam
-    // rows by construction (the sim_topk small-side argument), so the
-    // corpus scan stays map-side with ZERO shuffle. The first version
-    // shuffle_hash'd the corpus side instead — at mult-100 that
-    // re-shuffled the whole 2.4 GB index EVERY hop (measured: ~790 s
-    // warm + an executor OOM retry vs ~3 s with the beam broadcast).
-    def score(nodes: DataFrame): DataFrame =
-      embN.join(broadcast(nodes), Seq("node"))
-        .join(probes, Seq("qid"))
-        .select(col("qid"), col("node"),
-          round(graft.functions.CosineSim.cosineSim(col("qe"), col("ne")), 4)
-            .as("cos"))
-    // dedupe multi-path hits (cos is deterministic per (qid, node)),
-    // then keep the best b per query — dedupe and cap share ONE
-    // exchange (the build's topK convention: hash partitioning on qid
-    // satisfies both the (qid, node) and the (qid) clustering, and the
-    // cap is an array_sort inside the agg, not a window sort)
-    val byCos = (l: Column, r: Column) =>
-      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
-        .when(l("node") < r("node"), -1).when(l("node") > r("node"), 1)
-        .otherwise(0)
-    def topB(df: DataFrame, b: Int): DataFrame =
-      df.repartition(qidParts(spark), col("qid"))
-        .groupBy(col("qid"), col("node")).agg(max(col("cos")).as("cos"))
-        .groupBy(col("qid"))
-        .agg(slice(array_sort(collect_list(struct(col("cos"), col("node"))),
-          byCos), 1, b).as("top"))
-        .select(col("qid"), explode(col("top")).as("e"))
-        .select(col("qid"), col("e.node").as("node"), col("e.cos").as("cos"))
     // Each hop's beam is consumed TWICE by the next hop (frontier join +
     // union) — persist every round or the terminal action re-executes
     // hop h's work 2^(Hops-h) times (measured: the unpersisted loop ran
@@ -1383,37 +1367,23 @@ object Similarity {
     // ≤ Beam rows/query and Caches releases them at the harness
     // boundary).
     // Descent-provided seeds arrive ALREADY scored, deduped and capped
-    // (the descent's last round is itself a topB over the identical
-    // round(cos, 4) scoring — r19): they ARE a valid round-0 beam, so
-    // the seed re-score + re-cap round runs only for the md5-random
-    // flat-tier entry.
-    var beam = seeds0.getOrElse {
-      val seeds = probes.select(col("qid"),
-          explode(sequence(lit(0), lit(Seeds - 1))).as("i"))
-        .select(col("qid"),
-          pmod(conv(substring(md5(concat(lit("gs:"), col("qid"), lit(":"),
-            col("i"))), 1, 12), 16, 10).cast("long"), lit(n)).as("node"))
-      Caches.persist(topB(score(seeds), Beam))
-    }
-    // beam side broadcast (≤ queries·Beam rows) — the cached index is
-    // scanned map-side once per hop, never shuffled (see score())
-    def frontierOf(b: DataFrame): DataFrame = adjE
-      .join(broadcast(b.select(col("qid"), col("node").as("v"))),
-        Seq("v"))
-      .join(probes, Seq("qid"))
-      .select(col("qid"), col("w").as("node"),
-        round(graft.functions.CosineSim.cosineSim(col("qe"), col("ew")), 4)
-          .as("cos"))
+    // by the same kernel (the descent's last round is a topB over
+    // scoreNodes): they ARE a valid round-0 beam, so the seed re-score +
+    // re-cap round runs only for the md5-random flat-tier entry.
+    var beam = seeds0.getOrElse(Caches.persist(
+      topB(spark, scoreNodes(embN, probes, randomSeeds(probes, n)), Beam)))
+    def hop(b: DataFrame): DataFrame =
+      b.union(scoreFrontier(frontierOf(adjE, probes, b)))
     for (_ <- 1 until hops) {
-      beam = Caches.persist(topB(beam.union(frontierOf(beam)), Beam))
+      beam = Caches.persist(topB(spark, hop(beam), Beam))
     }
     // the LAST hop folds the output cap into its own round (r19): with
     // Beam ≥ K+1 and at most one self-row per query, top-K of the
     // self-dropped union equals the former topB(Beam)-then-filter-then-
     // topB(K) chain — one whole shuffle round (exchange + two aggs)
     // saved on every graph-search key.
-    val last = if (hops >= 1) beam.union(frontierOf(beam)) else beam
-    topB(last.filter(col("node") =!= col("qid")), K)
+    val last = if (hops >= 1) hop(beam) else beam
+    topB(spark, last.filter(col("node") =!= col("qid")), K)
       .select(col("qid").as("probe_id"), col("node").as("cand_id"),
         col("cos").as("cosine"))
       .orderBy("probe_id", "cand_id")
@@ -1509,9 +1479,12 @@ object Similarity {
     val levels = emb.withColumn("lvl",
       least(floor(-log(u) / math.log(LayerFanout.toDouble)), lit(lMax))
         .cast("int"))
-    val byCosDesc = (l: Column, r: Column) =>
-      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
-        .when(l("w") < r("w"), -1).when(l("w") > r("w"), 1).otherwise(0)
+    // a layer's (v, w, cos) edges → each member's top-LayerK
+    def layerTop(edges: DataFrame, l: Int): DataFrame = edges
+      .groupBy(col("v"))
+      .agg(topByCos(struct(col("cos"), col("w")), "w", LayerK).as("top"))
+      .select(lit(l).as("lvl"), col("v"), explode(col("top")).as("e"))
+      .select(col("lvl"), col("v"), col("e.w").as("w"), col("e.cos").as("cos"))
     (1 to lMax).map { l =>
       val mem = levels.filter(col("lvl") >= l)
         .select(col("vec_id"), col("embedding"))
@@ -1540,39 +1513,23 @@ object Similarity {
         // and the id map can release NOW — the commit of the unioned
         // layer table happens after every layer has built, and holding
         // each layer's full-degree gossip graph that long is the leak
-        val out = Caches.registerCheckpoint(back
-          .groupBy(col("v"))
-          .agg(slice(array_sort(collect_list(struct(col("cos"), col("w"))),
-            byCosDesc), 1, LayerK).as("top"))
-          .select(lit(l).as("lvl"), col("v"), explode(col("top")).as("e"))
-          .select(col("lvl"), col("v"), col("e.w").as("w"),
-            col("e.cos").as("cos"))
-          .localCheckpoint(true))
+        val out = Caches.registerCheckpoint(
+          layerTop(back, l).localCheckpoint(true))
         Caches.releaseCheckpoint(g)
         dense.unpersist()
         out
       } else {
         val a = mem.select(col("vec_id").as("v"), col("embedding").as("ev"))
         val b = mem.select(col("vec_id").as("w"), col("embedding").as("ew"))
-        a.join(broadcast(b), col("v") =!= col("w"))
-          .select(col("v"), col("w"),
-            round(graft.functions.CosineSim.cosineSim(col("ev"), col("ew")), 4)
-              .as("cos"))
-          .groupBy(col("v"))
-          .agg(slice(array_sort(collect_list(struct(col("cos"), col("w"))),
-            byCosDesc), 1, LayerK).as("top"))
-          .select(lit(l).as("lvl"), col("v"), explode(col("top")).as("e"))
-          .select(col("lvl"), col("v"), col("e.w").as("w"),
-            col("e.cos").as("cos"))
+        layerTop(a.join(broadcast(b), col("v") =!= col("w"))
+          .select(col("v"), col("w"), cos4(col("ev"), col("ew")).as("cos")), l)
       }
     }.reduce(_ unionByName _)
   }
 
   def simHnsw(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    hnswSearchFor(spark, dir,
-      emb.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe")))
+    hnswSearchFor(spark, dir, probesOf(emb, "qid", "qe"))
   }
 
   /** Layer descent + layer-0 beam search for an arbitrary probe frame
@@ -1604,24 +1561,6 @@ object Similarity {
       .select(col("vec_id"), col("embedding"))
     val embN = emb.select(col("vec_id").as("node"), col("embedding").as("ne"))
     val probes = broadcast(probes0.select(col("qid"), col("qe")))
-    def score(nodes: DataFrame): DataFrame =
-      embN.join(broadcast(nodes), Seq("node"))
-        .join(probes, Seq("qid"))
-        .select(col("qid"), col("node"),
-          round(graft.functions.CosineSim.cosineSim(col("qe"), col("ne")), 4)
-            .as("cos"))
-    val byCos = (l: Column, r: Column) =>
-      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
-        .when(l("node") < r("node"), -1).when(l("node") > r("node"), 1)
-        .otherwise(0)
-    def topB(df: DataFrame, b: Int): DataFrame =
-      df.repartition(qidParts(spark), col("qid"))
-        .groupBy(col("qid"), col("node")).agg(max(col("cos")).as("cos"))
-        .groupBy(col("qid"))
-        .agg(slice(array_sort(collect_list(struct(col("cos"), col("node"))),
-          byCos), 1, b).as("top"))
-        .select(col("qid"), explode(col("top")).as("e"))
-        .select(col("qid"), col("e.node").as("node"), col("e.cos").as("cos"))
     // entry: the top of the hierarchy is trivially SMALL (fanout-16
     // geometry: layer ℓ has n/16^ℓ members — at sf0.1 layer 3 has ~5,
     // layer 2 ~78), so descending it buys nothing over simply SCORING
@@ -1666,7 +1605,8 @@ object Similarity {
     val entry = probes.select(col("qid")).crossJoin(
       broadcast(entryIds.toSeq.toDF("node")))
     var beam = Caches.registerCheckpoint(
-      topB(score(entry), LayerBeam).localCheckpoint(true))
+      topB(spark, scoreNodes(embN, probes, entry), LayerBeam)
+        .localCheckpoint(true))
     // descent: ONE round per layer — the beam's whole LayerHops-hop
     // neighborhood over the layer's (symmetrized) edges, scored in a
     // single pass, then one topB and one lineage cut. This is a
@@ -1694,7 +1634,8 @@ object Similarity {
         nodes = nodes.union(frontier)
       }
       beam = Caches.registerCheckpoint(
-        topB(beam.union(score(nodes)), LayerBeam).localCheckpoint(true))
+        topB(spark, beam.union(scoreNodes(embN, probes, nodes)), LayerBeam)
+          .localCheckpoint(true))
     }
     // full (qid, node, cos) — the layer-0 search consumes this as its
     // round-0 beam without re-scoring (see graphSearchFor)
@@ -1734,10 +1675,8 @@ object Similarity {
   def simFilteredGraph(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"))
-    val probes = emb.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("label").as("plabel"))
-    filteredGraphSearchFor(spark, dir, probes)
+    filteredGraphSearchFor(spark, dir,
+      probesOf(emb, "qid", "qe", col("label").as("plabel")))
       .orderBy("probe_id", "cand_id")
   }
 
@@ -1757,36 +1696,12 @@ object Similarity {
     val embN = emb.select(col("vec_id").as("node"),
       col("embedding").as("ne"), col("label").as("ln"))
     val adjE = searchAdj(spark, dir)
-    val byCos = (l: Column, r: Column) =>
-      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
-        .when(l("node") < r("node"), -1).when(l("node") > r("node"), 1)
-        .otherwise(0)
-    def topB(df: DataFrame, b: Int): DataFrame =
-      df.repartition(qidParts(spark), col("qid"))
-        .groupBy(col("qid"), col("node")).agg(max(col("cos")).as("cos"))
-        .groupBy(col("qid"))
-        .agg(slice(array_sort(collect_list(struct(col("cos"), col("node"))),
-          byCos), 1, b).as("top"))
-        .select(col("qid"), explode(col("top")).as("e"))
-        .select(col("qid"), col("e.node").as("node"), col("e.cos").as("cos"))
-    // node scoring used for BOTH roles at the seed step: navigation
-    // keeps everything, collection keeps label matches
-    def score(nodes: DataFrame): DataFrame =
-      embN.join(broadcast(nodes), Seq("node"))
-        .join(probes, Seq("qid"))
-        .select(col("qid"), col("node"), col("ln"), col("plabel"),
-          round(graft.functions.CosineSim.cosineSim(col("qe"), col("ne")), 4)
-            .as("cos"))
     val seeds = hnswDescend(spark, dir,
         probes0.select(col("qid"), col("qe")))
       // this path re-scores under the label-carrying projection, so
       // only the (qid, node) columns of the descent beam are wanted
-      .map(_.select(col("qid"), col("node"))).getOrElse(
-      probes.select(col("qid"),
-          explode(sequence(lit(0), lit(Seeds - 1))).as("i"))
-        .select(col("qid"),
-          pmod(conv(substring(md5(concat(lit("gs:"), col("qid"), lit(":"),
-            col("i"))), 1, 12), 16, 10).cast("long"), lit(n)).as("node")))
+      .map(_.select(col("qid"), col("node")))
+      .getOrElse(randomSeeds(probes, n))
     // MATCHED entry points: [[Seeds]] deterministic draws from each
     // label region the predicate admits — the per-label analogue of
     // the descent's entry hierarchy. The descent seeds the walk near
@@ -1811,9 +1726,8 @@ object Similarity {
         explode(sequence(lit(0), lit(Seeds - 1))).as("i"))
       .select(col("qid"),
         element_at(col("members"),
-          (pmod(conv(substring(md5(concat(lit("fgs:"), col("qid"),
-            lit(":"), col("i"))), 1, 12), 16, 10).cast("long"),
-            size(col("members"))) + 1).cast("int")).as("node"))
+          (md5Draw("fgs:", col("qid"), col("i"), size(col("members"))) + 1)
+            .cast("int")).as("node"))
     // ef-widening (the filtered-HNSW rule): a selective predicate's
     // true top-K sits ~K/selectivity deep in the GLOBAL ranking, so
     // the walk must hold a candidate set sized to that depth — the
@@ -1823,7 +1737,10 @@ object Similarity {
     // recall@10 — the last few points are the deepest-ranked true
     // matches, bought by holding more matched frontier.
     val beamF = 3 * Beam
-    val seedScored = score(seeds.unionByName(matchedSeeds))
+    // seed scoring serves BOTH roles: navigation keeps everything,
+    // collection keeps label matches
+    val seedScored = scoreNodes(embN, probes, seeds.unionByName(matchedSeeds),
+      col("ln"), col("plabel"))
     // DUAL beam (the filtered-HNSW widening rule, made structural):
     // the UNFILTERED beam keeps the walk connected toward the query's
     // global neighborhood; the MATCHED beam — the best label-matching
@@ -1848,10 +1765,6 @@ object Similarity {
     // tier — the r16 uncut-chain lesson in dual form). One frame per
     // round restores the flat tier's LINEAR chain under the identical
     // candidate sets, and both tier caps share one exchange + one agg.
-    val byCosM = (l: Column, r: Column) =>
-      when(l("cos") > r("cos"), -1).when(l("cos") < r("cos"), 1)
-        .when(l("node") < r("node"), -1).when(l("node") > r("node"), 1)
-        .otherwise(0)
     // (qid, node, cos, m) → the union of top-Beam overall and
     // top-beamF matched, deduped — the expansion set AND accumulator
     def topBoth(df: DataFrame): DataFrame =
@@ -1860,11 +1773,10 @@ object Similarity {
         .agg(max(col("cos")).as("cos"), max(col("m")).as("m"))
         .groupBy(col("qid"))
         .agg(
-          slice(array_sort(collect_list(struct(col("cos"), col("node"),
-            col("m"))), byCosM), 1, Beam).as("ta"),
-          slice(array_sort(collect_list(when(col("m"),
-            struct(col("cos"), col("node"), col("m")))), byCosM), 1, beamF)
-            .as("tm"))
+          topByCos(struct(col("cos"), col("node"), col("m")), "node", Beam)
+            .as("ta"),
+          topByCos(when(col("m"), struct(col("cos"), col("node"), col("m"))),
+            "node", beamF).as("tm"))
         .select(col("qid"),
           explode(array_distinct(concat(col("ta"), col("tm")))).as("e"))
         .select(col("qid"), col("e.node").as("node"), col("e.cos").as("cos"),
@@ -1880,22 +1792,14 @@ object Similarity {
     // hops 0.86 before the entry/widening levers; per-hop volume
     // stays beam×degree-bounded)
     def roundOf(b: DataFrame): DataFrame = {
-      val frontier = adjE
-        .join(broadcast(b.select(col("qid"), col("node").as("v"))),
-          Seq("v"))
-        .join(probes, Seq("qid"))
+      val frontier = frontierOf(adjE, probes, b)
       // navigation: every frontier node keeps the walk connected
-      val scoredAll = frontier
-        .select(col("qid"), col("w").as("node"),
-          round(graft.functions.CosineSim.cosineSim(col("qe"), col("ew")), 4)
-            .as("cos"), lit(false).as("m"))
+      val scoredAll = scoreFrontier(frontier, lit(false).as("m"))
       // collection: label-matched BEFORE the scoring projection — the
       // predicate binds to the index's inline label column map-side;
       // the (qid, node) dedupe's max(m) re-merges the matched rows
-      val scoredMatch = frontier.filter(pred(col("lw"), col("plabel")))
-        .select(col("qid"), col("w").as("node"),
-          round(graft.functions.CosineSim.cosineSim(col("qe"), col("ew")), 4)
-            .as("cos"), lit(true).as("m"))
+      val scoredMatch = scoreFrontier(
+        frontier.filter(pred(col("lw"), col("plabel"))), lit(true).as("m"))
       b.union(scoredAll).union(scoredMatch)
     }
     for (_ <- 1 until Hops) {
@@ -1905,7 +1809,7 @@ object Similarity {
     // final hop folds the matched-only output cap into its own round
     // (the graphSearchFor convention: beamF ≥ K+1, so top-K of the
     // self-dropped matched union equals the former cap chain)
-    topB(roundOf(beam).filter(col("m") && col("node") =!= col("qid"))
+    topB(spark, roundOf(beam).filter(col("m") && col("node") =!= col("qid"))
         .select(col("qid"), col("node"), col("cos")), K)
       .select(col("qid").as("probe_id"), col("node").as("cand_id"),
         col("cos").as("cosine"))
@@ -1928,21 +1832,15 @@ object Similarity {
     graft.functions.CosineSim.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val probes = broadcast(
-      emb.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
+    val probes = broadcast(probesOf(emb, "probe_id", "pe"))
     val scored = emb.join(probes, col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("vec_id").as("cand_id"),
         round(expr("cosine_sim(pe, embedding)"), 4).as("cf"),
         round(expr("cosine_sim(slice(pe, 1, 16), slice(embedding, 1, 16))"),
           4).as("cp"))
-    val wF = Window.partitionBy("probe_id")
-      .orderBy(col("cf").desc, col("cand_id"))
-    val wP = Window.partitionBy("probe_id")
-      .orderBy(col("cp").desc, col("cand_id"))
     scored
-      .withColumn("rf", row_number().over(wF))
-      .withColumn("rp", row_number().over(wP))
+      .withColumn("rf", row_number().over(ranked("probe_id", "cf", "cand_id")))
+      .withColumn("rp", row_number().over(ranked("probe_id", "cp", "cand_id")))
       .groupBy("probe_id")
       .agg(
         sum(when(col("rf") <= 5 && col("rp") <= 5, 1L).otherwise(0L))

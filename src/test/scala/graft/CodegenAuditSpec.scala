@@ -38,7 +38,8 @@ class CodegenAuditSpec extends SparkSpec {
     "decontam_overlap" -> ("shingle construction is transform() over per-doc " +
       "token arrays — bounded per doc, decade-measured (SCALING.md)"),
     "dedup_near" -> ("MinHash shingle/signature HOFs over the shared cached " +
-      "shingle frame; runtime tracks pair count sub-linearly (LshStress)"),
+      "shingle frame; runtime tracks pair count sub-linearly (SCALING.md " +
+      "\"LSH blowup stress\")"),
     "dedup_ngram" -> "shingle-construction HOF (shares the cached shingle frame)",
     "dedup_containment" -> ("shingle-construction HOF (same shared cached " +
       "shingle frame as dedup_ngram; the containment tail itself is codegen)"),

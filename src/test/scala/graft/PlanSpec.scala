@@ -1776,6 +1776,15 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), p)
   }
 
+  test("stat_runs: the run-boundary test evaluates ONE lag window " +
+      "function — the previous sign is named once, not re-spelled") {
+    operators.Caches.releaseAll()
+    val p = operators.EventAnalytics.statRuns(spark, sf)
+      .queryExecution.optimizedPlan.toString
+    assert(count(p, "lag(") === 1,
+      p.linesIterator.filter(_.contains("lag(")).mkString("\n"))
+  }
+
   test("sim_ivfpq: probe-lists broadcast, the corpus-sized code scan " +
       "joins on list_id as a broadcast-hash join — no cartesian, no " +
       "sort-merge over float32 storage in the shortlist tier") {

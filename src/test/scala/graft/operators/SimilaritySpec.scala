@@ -30,6 +30,37 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.forall(r => math.abs(r.getDouble(2)) <= 1.0001))
   }
 
+  test("ranking rule: the window top-K and the array_sort cap both " +
+      "break cosine ties by ascending id and keep exactly K per group; " +
+      "the cap dedupes a multi-path hit to its max cos") {
+    import spark.implicits._
+    // group 1 ties at 0.9 (ids 5, 3) and at 0.5 across the K = 3 cut
+    // (ids 9, 2, 7); group 2 ties at 0.1 across the cut (ids 4, 1, 6)
+    val rows = Seq((1L, 5L, 0.9), (1L, 3L, 0.9), (1L, 9L, 0.5),
+      (1L, 2L, 0.5), (1L, 7L, 0.5), (2L, 4L, 0.1), (2L, 1L, 0.1),
+      (2L, 8L, 0.3), (2L, 6L, 0.1))
+    val want = Map(1L -> Seq(3L, 5L, 2L), 2L -> Seq(8L, 1L, 4L))
+    val win = Similarity.windowTopK(rows.toDF("g", "id", "cos"),
+        "g", "cos", "id", 3)
+      .collect().toSeq.map(r => (r.getLong(0), r.getInt(3), r.getLong(1)))
+      .groupBy(_._1)
+      .map { case (g, rs) => g -> rs.sortBy(_._2).map(_._3) }
+    assert(win === want)
+    def cap(df: org.apache.spark.sql.DataFrame) =
+      Similarity.topB(spark, df, 3).collect().toSeq
+        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2) }
+    val cos = rows.map { case (g, id, c) => (g, id) -> c }.toMap
+    assert(cap(rows.toDF("qid", "node", "cos")) ===
+      want.map { case (g, ids) => g -> ids.map(id => (id, cos((g, id)))) })
+    // the same node reached twice (0.9 twice, 9 at 0.5 and 0.95): one
+    // slot each, at the larger cos — a duplicate would take node 3's
+    // second slot, a non-max merge would drop node 9 below the cut
+    val multi = rows ++ Seq((1L, 3L, 0.9), (1L, 9L, 0.95))
+    assert(cap(multi.toDF("qid", "node", "cos"))(1L) ===
+      Seq((9L, 0.95), (3L, 0.9), (5L, 0.9)))
+  }
+
   test("IVF sim_ann recall@10 >= 0.7 vs brute force") {
     val truth = pairSet(Similarity.simTopk(spark, sf))
     val ann   = pairSet(Similarity.simAnn(spark, sf))
