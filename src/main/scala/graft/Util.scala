@@ -36,4 +36,40 @@ object Util {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
+
+  /** Deletes a directory tree (a no-op if it is absent). Scratch dirs
+    * (streaming checkpoints, per-process exports, test fixtures) are
+    * deleted on completion or every run leaks them into the temp dir
+    * (ADVICE r3). Best-effort by definition: query.stop() returns
+    * before the state-store maintenance thread fully halts and can drop
+    * a fresh snapshot into state/<op>/<part> between the walk and the
+    * directory delete (DirectoryNotEmptyException, seen ~1-in-4 on
+    * stream_state_ttl's tmpfs checkpoint) — so retry briefly, then
+    * warn and leak rather than fail the caller. */
+  def deleteRecursively(root: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    def sweep(): Unit = {
+      val walk = Files.walk(root)
+      // Files.walk holds directory handles until closed (ADVICE r4) —
+      // collect under try/finally, delete after the stream is closed.
+      val paths = try walk.iterator().asScala.toSeq finally walk.close()
+      paths.reverse.foreach(p => Files.deleteIfExists(p))
+    }
+    var attempt = 0
+    while (Files.exists(root)) {
+      attempt += 1
+      try sweep()
+      catch {
+        // (a walk that meets a vanishing entry throws the unchecked kind)
+        case _: java.io.IOException | _: java.io.UncheckedIOException
+            if attempt < 4 => Thread.sleep(200)
+        case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+          System.err.println(
+            s"[graft] temp dir cleanup leaked $root after $attempt " +
+              s"attempts: $e")
+          return
+      }
+    }
+  }
 }

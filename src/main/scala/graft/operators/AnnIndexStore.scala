@@ -13,29 +13,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * NN-Descent build (the heaviest batch key) and the k-means fit. At
   * 100 TB the build is a scheduled job and every query session READS
   * the committed artifact; this store is that split, expressed with
-  * the repo's own lakehouse machinery ([[Layout]]'s `_graft_log`
-  * manifests with per-file footer stats — the Delta/Iceberg shape).
+  * the repo's own lakehouse machinery ([[CommitLog]] manifests with
+  * per-file footer stats — the Delta/Iceberg shape).
   *
   * Layout per index: an immutable parquet file set under a STABLE
   * per-(kind, corpus) root (deliberately NOT the per-PID export
-  * scratch — the artifact must outlive the process), plus
-  * `_graft_log/v0.txt` whose header line records the sha-256 of the
-  * corpus + build-param fingerprint and whose remaining lines list
-  * exactly the committed files with per-file min/max stats on the
-  * index's cluster column.
+  * scratch — the artifact must outlive the process), plus manifest
+  * `v0` whose header line records the sha-256 of the corpus +
+  * build-param fingerprint and whose remaining lines list exactly the
+  * committed files with per-file min/max stats on the index's cluster
+  * column.
   *
   * Commit protocol (single writer per harness contract, but crash- and
   * reader-safe regardless): data files first, then the manifest via
-  * temp-file + ATOMIC REPLACE — the manifest is the commit point, so a
-  * torn write leaves a miss (rebuild), never a half-index. The
+  * the commit log's [[CommitLog.Replace]] publish — the manifest is
+  * the commit point, so a torn write leaves a miss (rebuild), never a
+  * half-index. The versioned tables of [[Layout]] publish through the
+  * same log in its other mode, [[CommitLog.Exclusive]]. The
   * fingerprint (corpus source files' path/length/mtime + build params)
   * rides INSIDE the manifest as a sha-256 header line (r18, ADVICE
   * r17): identity and file list commit in the SAME rename, so no
   * reader can ever pair a new fingerprint with an old file list — the
   * stale-serve window a separate fingerprint.txt left open once
-  * versioning stopped deleting old data files. Atomic replace (nio
-  * ATOMIC_MOVE locally, FileContext Rename.OVERWRITE on HDFS) also
-  * closes the delete-then-rename no-manifest window that briefly
+  * versioning stopped deleting old data files. The atomic replace
+  * also closes the delete-then-rename no-manifest window that briefly
   * forced a redundant rebuild on a concurrent reader. Any corpus
   * regeneration or param change misses and rebuilds. This is the same
   * validity contract Delta encodes with its snapshot version +
@@ -56,47 +57,9 @@ object AnnIndexStore {
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The raw (checksum-free) filesystem for _graft_log small-file IO.
-    * The local FS Spark hands back is checksummed: every create leaves
-    * a `.name.crc` sidecar, and an atomic REPLACE of just the data file
-    * would leave a stale sidecar that fails the next checksummed open.
-    * Manifest reads/writes/renames all go through the raw layer —
-    * legacy sidecars from pre-r18 commits are simply ignored. */
-  private def logFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    fs(spark, p) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
-
   /** One manifest header line carrying the commit's identity. */
   private def fpHeader(fp: String): String =
     s"#fp_sha256=${graft.Util.sha256Hex(fp)}"
-
-  /** Atomic replace of `dst` by `tmp`: readers see the old complete
-    * manifest or the new complete one — never a missing or partial
-    * file (ADVICE r17: delete-then-rename had a no-manifest window
-    * that triggered redundant rebuilds). */
-  private def renameOverwrite(spark: SparkSession,
-      hfs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit = {
-    // via the URI, not FileSystem.getScheme — RawLocalFileSystem
-    // doesn't implement the latter (base class throws)
-    val scheme = Option(hfs.getUri.getScheme).getOrElse("file")
-    if (scheme == "file") {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      // HDFS: FileContext rename-overwrite is the atomic primitive
-      // (FileSystem.rename refuses an existing destination)
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(hfs.getUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
 
   /** Corpus + build-parameter identity: every embeddings source file's
     * (relative path, length, mtime) plus the caller's parameter tag.
@@ -127,23 +90,20 @@ object AnnIndexStore {
   private[operators] def readCommitted(spark: SparkSession, kind: String,
       dir: String, fp: String): Option[DataFrame] = {
     val r = root(kind, dir)
-    val hfs = logFs(spark, r)
-    val mf = Layout.manifestPath(r, 0)
+    val hfs = fs(spark, r)
+    val mf = CommitLog.manifestPath(r, 0)
     if (!hfs.exists(mf)) return None
     // identity check: the manifest's own header line (committed in the
     // same atomic rename as the file list — fp and files can't skew)
-    val entries = Layout.readManifestStats(hfs, mf)
-    if (!entries.headOption.exists(_._1 == fpHeader(fp))) return None
-    val files = entries.tail.map(e => s"${r.toString}/${e._1}")
-    if (files.nonEmpty) Some(spark.read.parquet(files: _*))
+    val m = CommitLog.readManifest(hfs, mf)
+    if (!m.headers.headOption.contains(fpHeader(fp))) return None
+    if (m.files.nonEmpty)
+      Some(spark.read.parquet(m.files.map(f => s"${r.toString}/$f"): _*))
     else {
-      val sp = new org.apache.hadoop.fs.Path(r, "_graft_log/schema.json")
+      val sp = CommitLog.sidecarPath(r, "schema.json")
       if (!hfs.exists(sp)) return None
-      val in = hfs.open(sp)
-      val bytes = new Array[Byte](hfs.getFileStatus(sp).getLen.toInt)
-      in.readFully(bytes); in.close()
       val schema = org.apache.spark.sql.types.DataType
-        .fromJson(new String(bytes, "UTF-8"))
+        .fromJson(CommitLog.readFile(hfs, sp))
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       Some(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
@@ -160,7 +120,7 @@ object AnnIndexStore {
   private[operators] def commit(spark: SparkSession, kind: String,
       dir: String, df: DataFrame, statsCol: String, fp: String): DataFrame = {
     val r = root(kind, dir)
-    val hfs = logFs(spark, r)
+    val hfs = fs(spark, r)
     // VERSIONED data directory (ADVICE r16): data files land in a
     // fresh uniquely-named subdir instead of a delete-in-place of the
     // shared root — a racing process (or a superseded commit) can
@@ -179,30 +139,23 @@ object AnnIndexStore {
     // fleet's task count, here it is 32 modest files.
     df.repartitionByRange(org.apache.spark.sql.functions.col(statsCol))
       .write.mode("overwrite").parquet(dataDir.toString)
-    val files = Layout.dataFiles(hfs, dataDir).map(f => s"$ver/$f")
+    val files = CommitLog.dataFiles(hfs, dataDir).map(f => s"$ver/$f")
     // schema sidecar: lets an EMPTY artifact (zero data files) read
     // back with the right schema instead of failing inference
-    val sp = new org.apache.hadoop.fs.Path(r, "_graft_log/schema.json")
-    val sos = hfs.create(sp, true)
-    sos.write(df.schema.json.getBytes("UTF-8")); sos.close()
+    CommitLog.publishFile(hfs, CommitLog.sidecarPath(r, "schema.json"),
+      df.schema.json, CommitLog.Replace)
     // manifest body — fingerprint HEADER first, then the file lines —
-    // to a temp name, then ONE atomic replace into place: readers see
-    // the previous complete commit or this complete commit, never a
-    // prefix, never a fingerprint paired with another commit's files
-    // (ADVICE r17 medium), and never a missing manifest (ADVICE r17
-    // low — the old delete-then-rename window forced a concurrent
-    // reader into a redundant rebuild). A same-fingerprint racer that
-    // beat us to the replace left an equivalent commit (the build is
-    // deterministic), so either ordering read-backs consistently.
-    val mfPath = Layout.manifestPath(r, 0)
-    val tmp = new org.apache.hadoop.fs.Path(r, s"_graft_log/v0.txt.$ver.tmp")
-    val stats = Layout.footerStats(spark, r, files, statsCol)
-    val lines = fpHeader(fp) +: files.sorted.map { f =>
-      stats.get(f).map { case (mn, mx) => s"$f\t$mn\t$mx" }.getOrElse(f)
-    }
-    val os = hfs.create(tmp, true)
-    os.write(lines.mkString("\n").getBytes("UTF-8")); os.close()
-    renameOverwrite(spark, hfs, tmp, mfPath)
+    // in ONE atomic replace: readers see the previous complete commit
+    // or this complete commit, never a prefix, never a fingerprint
+    // paired with another commit's files (ADVICE r17 medium), and never
+    // a missing manifest (ADVICE r17 low — the old delete-then-rename
+    // window forced a concurrent reader into a redundant rebuild). A
+    // same-fingerprint racer that beat us to the replace left an
+    // equivalent commit (the build is deterministic), so either
+    // ordering reads back consistently.
+    CommitLog.publish(hfs, r, 0, files,
+      CommitLog.footerStats(spark, r, files, statsCol),
+      headers = Seq(fpHeader(fp)), mode = CommitLog.Replace)
     commits.incrementAndGet()
     readCommitted(spark, kind, dir, fp).getOrElse(
       throw new IllegalStateException(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -37,7 +38,7 @@ object Layout {
     Seq(tOrders, tCustomer).foreach { t =>
       if (!spark.catalog.tableExists(t)) {
         val d = java.nio.file.Paths.get(wh, t)
-        graft.streaming.Streams.deleteRecursively(d)
+        graft.Util.deleteRecursively(d)
       }
     }
     Tables.orders(spark, dir)
@@ -483,7 +484,7 @@ object Layout {
     * replaces the broadcast join entirely. */
   private[graft] final class MergeTargetCache(spark: SparkSession,
       path: String, partCol: String) {
-    private val root = new org.apache.hadoop.fs.Path(path)
+    private val root = new Path(path)
     private val fs =
       root.getFileSystem(spark.sessionState.newHadoopConf())
     /** Read once at construction — the merge never evolves the schema. */
@@ -517,7 +518,7 @@ object Layout {
 
     private def listDataFiles(value: String): Seq[String] = {
       val dir =
-        new org.apache.hadoop.fs.Path(root, s"$partCol=${escape(value)}")
+        new Path(root, s"$partCol=${escape(value)}")
       if (!fs.exists(dir)) Seq.empty
       else fs.listStatus(dir).toSeq
         .filter { s =>
@@ -615,10 +616,9 @@ object Layout {
   // -------------------------------------------------------------------
   // `table_snapshot` — commit-log time travel, the read-side half of
   // the lakehouse pair (merge_into is the write side). The table is a
-  // directory of IMMUTABLE parquet files plus a `_graft_log/` of
+  // directory of IMMUTABLE parquet files plus a [[CommitLog]] of
   // version manifests, each listing exactly the files visible at that
-  // version — the scheme Delta/Iceberg implement under their metadata
-  // formats. A copy-on-write update never touches an existing file: it
+  // version. A copy-on-write update never touches an existing file: it
   // appends replacement files for the rewritten partition and commits
   // a new manifest that drops the superseded ones. Reading version N
   // is then just `spark.read.parquet(manifest N's files)` — consistent
@@ -630,127 +630,55 @@ object Layout {
   // SnapshotSpec additionally pins the physical property that makes
   // COW cheap: v0 and v1 share every untouched partition file.
   // -------------------------------------------------------------------
-  private[graft] def snapshotPath(dir: String): String =
-    graft.sources.FormatSources.exportPath("snapshot", dir)
-
-  private[operators] def manifestPath(root: org.apache.hadoop.fs.Path, v: Int) =
-    new org.apache.hadoop.fs.Path(root, s"_graft_log/v$v.txt")
-
-  /** Relative paths of all data files currently in the table dir. */
-  private[operators] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[String] = {
-    val it = fs.listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val prefix = root.toUri.getPath + "/"
-    while (it.hasNext) {
-      val f = it.next().getPath.toUri.getPath
-      if (f.endsWith(".parquet") && !f.contains("_graft_log"))
-        out += f.stripPrefix(prefix)
-    }
-    out.toSeq.sorted
+  /** A fresh, empty table root for export `name` (any previous run's
+    * files deleted) and its filesystem. */
+  private def freshTable(spark: SparkSession, name: String, dir: String)
+      : (String, Path, FileSystem) = {
+    val path = graft.sources.FormatSources.exportPath(name, dir)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(root, true)
+    (path, root, fs)
   }
 
-  /** Manifest writer. Since r15 a line may carry per-file column stats
-    * (`relpath\tmin\tmax` — the Delta/Iceberg file-level min/max that
-    * lets a snapshot read prune files BEFORE listing them, VERDICT r14
-    * item 6); stat-less lines stay plain relpaths, so every existing
-    * manifest and every stats-free writer (snapshot_concurrent's
-    * racing commits) remains readable by the same parser. */
-  private[operators] def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, files: Seq[String],
-      stats: Map[String, (Long, Long)] = Map.empty): Unit = {
-    val os = fs.create(p, true)
-    val lines = files.sorted.map { f =>
-      stats.get(f).map { case (mn, mx) => s"$f\t$mn\t$mx" }.getOrElse(f)
-    }
-    os.write(lines.mkString("\n").getBytes("UTF-8"))
-    os.close()
-  }
+  /** events → (event_id, user_id, cents, event_type): the base table of
+    * every commit-log key. */
+  private def centsBase(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("event_id"), col("user_id"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
+        col("event_type"))
 
-  private[graft] def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] =
-    readManifestStats(fs, p).map(_._1)
+  /** Publishes version `v` of a table no other writer is racing. */
+  private def commitVersion(fs: FileSystem, root: Path, v: Int,
+      files: Seq[String], stats: Map[String, (Long, Long)] = Map.empty)
+      : Unit =
+    require(CommitLog.publish(fs, root, v, files, stats),
+      s"commit log of $root: version $v is already committed")
 
-  /** Manifest lines as (relpath, optional (min, max) stats). */
-  private[graft] def readManifestStats(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[(String, Option[(Long, Long)])] = {
-    val in = fs.open(p)
-    val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-    in.readFully(bytes)
-    in.close()
-    new String(bytes, "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
-      .map { line =>
-        line.split('\t') match {
-          case Array(f, mn, mx) => f -> Some((mn.toLong, mx.toLong))
-          case _ => line.takeWhile(_ != '\t') -> None
-        }
-      }
-  }
-
-  /** Per-file (min, max) of a BIGINT column read from the parquet
-    * FOOTERS — no data scan. The local stand-in for stats a real
-    * engine's write tasks return with their commit message; reading
-    * footers at commit time is what Delta's stats-collection backfill
-    * and Iceberg's `add_files` do for pre-existing files. */
-  private[operators] def footerStats(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path, files: Seq[String],
-      column: String): Map[String, (Long, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.flatMap { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(root, f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        r.getFooter.getBlocks.forEach { b =>
-          b.getColumns.forEach { c =>
-            if (c.getPath.toDotString == column) {
-              val st = c.getStatistics
-              mn = math.min(mn, st.genericGetMin.asInstanceOf[Number].longValue)
-              mx = math.max(mx, st.genericGetMax.asInstanceOf[Number].longValue)
-            }
-          }
-        }
-        // a zero-row part file has no column statistics — emit a
-        // stat-less manifest line for it (the parser tolerates both;
-        // ADVICE r16: the old require made an empty artifact a crash)
-        if (mn <= mx) Some(f -> (mn, mx)) else None
-      } finally r.close()
-    }.toMap
-  }
+  /** Every committed version carries per-file event_id min/max (r15:
+    * the snapshot_skipping stats scheme applied across the whole
+    * lakehouse triple — one manifest format, not a special case); the
+    * racing commits stay stats-less, which the reader tolerates by
+    * contract (stat-less lines never prune). */
+  private def commitWithStats(spark: SparkSession, fs: FileSystem,
+      root: Path, v: Int, files: Seq[String]): Unit =
+    commitVersion(fs, root, v, files,
+      CommitLog.footerStats(spark, root, files, "event_id"))
 
   /** Snapshot read: the manifest's file list, partition columns
     * recovered from the paths via basePath. */
   private[graft] def readSnapshot(spark: SparkSession, path: String,
-      v: Int): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = readManifest(fs, manifestPath(root, v))
-      .map(f => s"$path/$f")
-    spark.read.option("basePath", path).parquet(files: _*)
-  }
+      v: Int): DataFrame =
+    readSnapshotPruned(spark, path, v, Long.MinValue, Long.MaxValue)._1
 
   /** Builds the two-version table (idempotent: fresh dir each run). */
   private[graft] def snapshotBuild(spark: SparkSession, dir: String): String = {
-    val path = snapshotPath(dir)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-
-    val base = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        col("event_type"))
+    val (path, root, fs) = freshTable(spark, "snapshot", dir)
+    val base = centsBase(spark, dir)
     base.write.partitionBy("event_type").parquet(path)
-    val v0 = dataFiles(fs, root)
-    // every committed manifest carries per-file event_id min/max (r15:
-    // the snapshot_skipping stats scheme applied across the whole
-    // lakehouse triple — one manifest format, not a special case);
-    // snapshot_concurrent's racing commits stay stats-less, which the
-    // reader tolerates by contract (stat-less lines never prune)
-    writeManifest(fs, manifestPath(root, 0), v0,
-      footerStats(spark, root, v0, "event_id"))
+    val v0 = CommitLog.dataFiles(fs, root)
+    commitWithStats(spark, fs, root, 0, v0)
 
     // v1: copy-on-write rewrite of the 'click' partition (cents
     // doubled), recomputed from the source — appended as NEW files;
@@ -758,11 +686,9 @@ object Layout {
     base.filter(col("event_type") === "click")
       .withColumn("cents", col("cents") * 2)
       .write.mode("append").partitionBy("event_type").parquet(path)
-    val after = dataFiles(fs, root)
-    val appended = (after.toSet -- v0.toSet).toSeq.sorted
-    val v1 = v0.filterNot(_.startsWith("event_type=click/")) ++ appended
-    writeManifest(fs, manifestPath(root, 1), v1,
-      footerStats(spark, root, v1, "event_id"))
+    val appended = CommitLog.dataFiles(fs, root).filterNot(v0.toSet)
+    commitWithStats(spark, fs, root, 1,
+      v0.filterNot(_.startsWith("event_type=click/")) ++ appended)
     path
   }
 
@@ -826,19 +752,11 @@ object Layout {
   // -------------------------------------------------------------------
   private[graft] def snapshotSkipBuild(spark: SparkSession,
       dir: String): String = {
-    val path = graft.sources.FormatSources.exportPath("snapskip", dir)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        col("event_type"))
+    val (path, root, fs) = freshTable(spark, "snapskip", dir)
+    centsBase(spark, dir)
       .repartitionByRange(8, col("event_id"))
       .write.parquet(path)
-    val v0 = dataFiles(fs, root)
-    writeManifest(fs, manifestPath(root, 0), v0,
-      footerStats(spark, root, v0, "event_id"))
+    commitWithStats(spark, fs, root, 0, CommitLog.dataFiles(fs, root))
     path
   }
 
@@ -849,9 +767,10 @@ object Layout {
     * live) so specs can pin the pruning arithmetic. */
   private[graft] def readSnapshotPruned(spark: SparkSession, path: String,
       v: Int, lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = readManifestStats(fs, manifestPath(root, v))
+    val entries = CommitLog.readManifest(fs, CommitLog.manifestPath(root, v))
+      .entries
     val kept = entries.collect {
       case (f, st) if st.forall { case (mn, mx) => mx >= lo && mn <= hi } => f
     }
@@ -862,9 +781,10 @@ object Layout {
 
   def snapshotSkipping(spark: SparkSession, dir: String): DataFrame = {
     val path = snapshotSkipBuild(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = readManifestStats(fs, manifestPath(root, 0)).flatMap(_._2)
+    val stats = CommitLog.readManifest(fs, CommitLog.manifestPath(root, 0))
+      .entries.flatMap(_._2)
     val (mn, mx) = (stats.map(_._1).min, stats.map(_._2).max)
     // quartile-wide slice [mn + span/4, mn + 3·span/8] — scale-free, and
     // derived from the manifest alone (truncating div: both bounds
@@ -881,27 +801,20 @@ object Layout {
   // `snapshot_concurrent` — optimistic-commit concurrency on the commit
   // log, the write-contention semantic completing the lakehouse triple
   // (merge_into writes, table_snapshot reads, snapshot_expire reclaims):
-  // TWO writers race to commit version N+1 against the same
-  // `_graft_log`. The protocol is the one Delta's OptimisticTransaction
-  // and Iceberg's atomic metadata swap implement: write data files
-  // first (safe — unreferenced files are invisible to every reader),
-  // then try an ATOMIC create-exclusive of manifest v(N+1); the loser
-  // re-reads the winner's commit, VALIDATES non-overlap (the winner
-  // touched a different partition — a real engine aborts on a
+  // TWO writers race to commit version N+1 against the same log. The
+  // protocol is the one Delta's OptimisticTransaction and Iceberg's
+  // atomic metadata swap implement: write data files first (safe —
+  // unreferenced files are invisible to every reader), then try an
+  // ATOMIC create-exclusive of manifest v(N+1) ([[CommitLog.Exclusive]]);
+  // the loser re-reads the winner's commit, VALIDATES non-overlap (the
+  // winner touched a different partition — a real engine aborts on a
   // write-write conflict), rebases its manifest on the new base and
   // commits v(N+2). No lock is ever held: contention costs the loser
   // one manifest-sized retry, never a data rewrite — which is why the
   // scheme holds at 100 TB, where a table lock would serialize every
   // writer in the fleet and a retry-as-rewrite would double IO under
-  // contention.
-  //
-  // The exclusivity primitive is a POSIX hard link of a pre-written
-  // temp file (java.nio createLink) — it fails on an existing target
-  // exactly like O_CREAT|O_EXCL and publishes the FULL body in one
-  // atomic step, the local-FS stand-in for HDFS create-no-overwrite /
-  // an object store's conditional PUT. readManifestWait's existence
-  // spin only covers the loser polling for the winner's commit; a
-  // visible manifest is always complete.
+  // contention. A published manifest is always complete, so the
+  // loser reads the winner's commit the moment it is listed.
   //
   // Determinism for the oracle: the writers rewrite DISJOINT partitions
   // ('click' cents ×2, 'view' cents ×3), so the FINAL state v2 is
@@ -911,57 +824,42 @@ object Layout {
   // partitions plus both writers' files, winner's v1 shares every
   // untouched file with v0) are pinned in SnapshotSpec.
   // -------------------------------------------------------------------
-  /** Highest committed version in a table's `_graft_log`. */
-  private[graft] def logLatestVersion(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Int = {
-    val logDir = new org.apache.hadoop.fs.Path(root, "_graft_log")
-    fs.listStatus(logDir).map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") && s.endsWith(".txt") =>
-        s.stripPrefix("v").stripSuffix(".txt").toInt
-      }.max
-  }
-
-  /** Spin-read a manifest that a racing writer may be mid-publish on —
-    * only covers the loser polling for the winner's commit; a visible
-    * manifest is always complete (see [[tryCommitManifest]]). */
-  private[graft] def readManifestWaitFor(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Int): Seq[String] = {
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var out = Seq.empty[String]
-    while (out.isEmpty) {
-      val p = manifestPath(root, v)
-      if (fs.exists(p) && fs.getFileStatus(p).getLen > 0)
-        out = readManifest(fs, p)
-      else if (System.nanoTime() > deadline)
-        throw new IllegalStateException(
-          s"optimistic commit: manifest v$v never became readable")
-      else Thread.sleep(2)
-    }
-    out
-  }
-
-  /** Atomic create-exclusive publish of manifest v (ADVICE r14): body
-    * first to a private temp file, then hard-link it to the version
-    * slot — createLink fails with FileAlreadyExistsException exactly
-    * like O_CREAT|O_EXCL, and the full body appears in ONE step (the
-    * local-FS stand-in for HDFS create-no-overwrite / an object
-    * store's conditional PUT). A claim-then-write would leave a gap
-    * where a racing reader's len>0 check observes a partial body and
-    * the loser rebases on a truncated manifest. */
-  private[graft] def tryCommitManifest(root: org.apache.hadoop.fs.Path,
-      v: Int, files: Seq[String]): Boolean = {
-    val p = java.nio.file.Paths.get(manifestPath(root, v).toUri.getPath)
-    val tmp = p.resolveSibling(s".v$v-${Thread.currentThread().getId}.tmp")
-    java.nio.file.Files.write(tmp,
-      files.sorted.mkString("\n").getBytes("UTF-8"))
-    try java.nio.file.Files.createLink(p, tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp); return false
-    }
-    java.nio.file.Files.deleteIfExists(tmp)
-    true
+  /** The optimistic commit race both concurrency drills run: one thread
+    * per writer loops latest → read → `propose(writer, attempt, files)`
+    * → exclusive publish of latest + 1 until its CAS wins, calling
+    * `abandon(writer, attempt)` on each lost one. The barrier sits
+    * between every writer's FIRST proposal and its first commit: both
+    * writers provably read base v0 and race the SAME v1 slot, so
+    * exactly one conflict-and-retry happens every run — deterministic
+    * in structure, not scheduler luck. Later iterations skip it (the
+    * loser retries alone). Returns writer → (version, attempts). */
+  private def raceCommits(fs: FileSystem, root: Path, writers: Seq[String],
+      abandon: (String, Int) => Unit = (_, _) => ())(
+      propose: (String, Int, Seq[String]) => Seq[String])
+      : Map[String, (Int, Int)] = {
+    val barrier = new java.util.concurrent.CyclicBarrier(writers.size)
+    val won = new scala.collection.concurrent.TrieMap[String, (Int, Int)]
+    val failure =
+      new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val ts = writers.map { w => new Thread(() => {
+      try {
+        var n = 0
+        while (!won.contains(w)) {
+          val latest = CommitLog.latest(fs, root)
+          val next = propose(w, n, CommitLog.readManifest(fs,
+            CommitLog.manifestPath(root, latest)).files)
+          if (n == 0) barrier.await()
+          n += 1
+          if (CommitLog.publish(fs, root, latest + 1, next))
+            won(w) = (latest + 1, n)
+          else abandon(w, n - 1)
+        }
+      } catch { case t: Throwable => failure.compareAndSet(null, t) }
+    }, s"commit-race-$w") }
+    ts.foreach(_.start())
+    ts.foreach(_.join())
+    if (failure.get() != null) throw failure.get()
+    won.toMap
   }
 
   private[graft] case class SnapConcStats(
@@ -973,17 +871,11 @@ object Layout {
 
   private[graft] def snapConcBuild(spark: SparkSession,
       dir: String): SnapConcStats = {
-    val path = graft.sources.FormatSources.exportPath("snapconc", dir)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    val base = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        col("event_type"))
+    val (path, root, fs) = freshTable(spark, "snapconc", dir)
+    val base = centsBase(spark, dir)
     base.write.partitionBy("event_type").parquet(path)
-    val v0 = dataFiles(fs, root)
-    writeManifest(fs, manifestPath(root, 0), v0)
+    val v0 = CommitLog.dataFiles(fs, root)
+    commitVersion(fs, root, 0, v0)
 
     // Both writers' data files land BEFORE the commit race: two
     // concurrent Spark append jobs on one table path would share a
@@ -992,66 +884,30 @@ object Layout {
     // files under unique names exactly so the data write needs no
     // coordination either).
     def appendRewrite(part: String, factor: Int): Seq[String] = {
-      val before = dataFiles(fs, root).toSet
+      val before = CommitLog.dataFiles(fs, root).toSet
       base.filter(col("event_type") === part)
         .withColumn("cents", col("cents") * factor)
         .write.mode("append").partitionBy("event_type").parquet(path)
-      (dataFiles(fs, root).toSet -- before).toSeq.sorted
+      CommitLog.dataFiles(fs, root).filterNot(before)
     }
     val filesByPart = Map("click" -> appendRewrite("click", 2),
       "view" -> appendRewrite("view", 3))
 
-    def latestVersion(): Int = logLatestVersion(fs, root)
-    def readManifestWait(v: Int): Seq[String] =
-      readManifestWaitFor(fs, root, v)
-    def tryCommit(v: Int, files: Seq[String]): Boolean =
-      tryCommitManifest(root, v, files)
-
-    // The barrier sits between manifest PREPARATION and the first
-    // commit attempt: both writers provably read base v0 and race the
-    // SAME v1 slot, so exactly one conflict-and-retry happens every
-    // run — the drill is deterministic in structure, not scheduler
-    // luck. Later loop iterations skip it (the loser retries alone).
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val committed = new scala.collection.concurrent.TrieMap[String, Int]
-    val attempts = new scala.collection.concurrent.TrieMap[String, Int]
-    val failure =
-      new java.util.concurrent.atomic.AtomicReference[Throwable]
-    def writer(part: String): Thread = new Thread(() => {
-      try {
-        val mine = filesByPart(part)
-        val prefix = s"event_type=$part/"
-        val v0Mine = v0.filter(_.startsWith(prefix)).toSet
-        var done = false
-        var first = true
-        var n = 0
-        while (!done) {
-          val latest = latestVersion()
-          val snap = readManifestWait(latest)
-          // Re-validation (what a real engine runs on every retry): the
-          // base this commit rebases onto must not have touched OUR
-          // partition — its files there are still exactly v0's. Overlap
-          // would be a write-write conflict → abort, never rebase.
-          val theirs = snap.filter(_.startsWith(prefix)).toSet
-          require(theirs == v0Mine,
-            s"write-write conflict on $part: a concurrent commit " +
-              "modified this writer's partition — abort")
-          val next = snap.filterNot(_.startsWith(prefix)) ++ mine
-          if (first) { barrier.await(); first = false }
-          n += 1
-          if (tryCommit(latest + 1, next)) {
-            committed(part) = latest + 1
-            done = true
-          }
-        }
-        attempts(part) = n
-      } catch { case t: Throwable => failure.compareAndSet(null, t) }
-    }, s"snapconc-$part")
-    val ts = Seq(writer("click"), writer("view"))
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    if (failure.get() != null) throw failure.get()
-    SnapConcStats(path, v0, filesByPart, committed.toMap, attempts.toMap)
+    val won = raceCommits(fs, root, Seq("click", "view")) {
+      (part, _, snap) =>
+        // Re-validation (what a real engine runs on every retry): the
+        // base this commit rebases onto must not have touched OUR
+        // partition — its files there are still exactly v0's. Overlap
+        // would be a write-write conflict → abort, never rebase.
+        val mine = (_: String).startsWith(s"event_type=$part/")
+        require(snap.filter(mine).toSet == v0.filter(mine).toSet,
+          s"write-write conflict on $part: a concurrent commit " +
+            "modified this writer's partition — abort")
+        snap.filterNot(mine) ++ filesByPart(part)
+    }
+    SnapConcStats(path, v0, filesByPart,
+      won.map { case (p, (v, _)) => p -> v },
+      won.map { case (p, (_, n)) => p -> n })
   }
 
   def snapshotConcurrent(spark: SparkSession, dir: String): DataFrame = {
@@ -1096,73 +952,35 @@ object Layout {
 
   private[graft] def mergeConcBuild(spark: SparkSession,
       dir: String): MergeConcStats = {
-    val path = graft.sources.FormatSources.exportPath("mergeconc", dir)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(root, true)
-    Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        col("event_type"))
-      .write.parquet(path)
-    writeManifest(fs, manifestPath(root, 0), dataFiles(fs, root))
+    val (path, root, fs) = freshTable(spark, "mergeconc", dir)
+    centsBase(spark, dir).write.parquet(path)
+    commitVersion(fs, root, 0, CommitLog.dataFiles(fs, root))
 
-    // The barrier sits between each writer's FIRST merge computation
-    // (both provably from base v0) and its first commit attempt — so
-    // both race the same v1 slot and exactly one conflict-and-recompute
-    // happens every run: deterministic in structure, not scheduler
-    // luck.
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val committed = new scala.collection.concurrent.TrieMap[String, Int]
-    val attempts = new scala.collection.concurrent.TrieMap[String, Int]
+    val incs = Map("a" -> (3, 10L), "b" -> (5, 100L)) // modulus, +cents
     val computes = new scala.collection.concurrent.TrieMap[String, Int]
-    val failure =
-      new java.util.concurrent.atomic.AtomicReference[Throwable]
-    def writer(tag: String, modulus: Int, inc: Long): Thread =
-      new Thread(() => {
-        try {
-          var done = false
-          var first = true
-          var n = 0
-          while (!done) {
-            val latest = logLatestVersion(fs, root)
-            val snap = readManifestWaitFor(fs, root, latest)
-            // MERGE recompute on the CURRENT committed base — never a
-            // manifest rebase: an overlapping merge's output depends
-            // on base CONTENT, and this read-modify-write is exactly
-            // the window the version CAS has to close.
-            val stage = s"stage_${tag}_$n"
-            spark.read.option("basePath", path)
-              .parquet(snap.map(f => s"$path/$f"): _*)
-              .withColumn("cents",
-                when(pmod(col("event_id"), lit(modulus)) === 0,
-                  col("cents") + inc).otherwise(col("cents")))
-              .write.mode("overwrite").parquet(s"$path/$stage")
-            computes(tag) = computes.getOrElse(tag, 0) + 1
-            val mine = fs.listStatus(
-                new org.apache.hadoop.fs.Path(root, stage)).toSeq
-              .map(_.getPath.getName)
-              .filter(_.endsWith(".parquet"))
-              .map(f => s"$stage/$f").sorted
-            if (first) { barrier.await(); first = false }
-            n += 1
-            if (tryCommitManifest(root, latest + 1, mine)) {
-              committed(tag) = latest + 1
-              done = true
-            } else {
-              // conflict detected: our staged output is STALE (built
-              // on a replaced base) — abort it entirely and re-merge
-              fs.delete(new org.apache.hadoop.fs.Path(root, stage), true)
-            }
-          }
-          attempts(tag) = n
-        } catch { case t: Throwable => failure.compareAndSet(null, t) }
-      }, s"mergeconc-$tag")
-    val ts = Seq(writer("a", 3, 10L), writer("b", 5, 100L))
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    if (failure.get() != null) throw failure.get()
-    MergeConcStats(path, committed.toMap, attempts.toMap, computes.toMap)
+    def stage(tag: String, n: Int) = s"stage_${tag}_$n"
+    // a lost CAS means our staged output is STALE (built on a replaced
+    // base): abort it entirely and re-merge
+    val won = raceCommits(fs, root, Seq("a", "b"),
+        abandon = (tag, n) => fs.delete(new Path(root, stage(tag, n)), true)) {
+      (tag, n, snap) =>
+        // MERGE recompute on the CURRENT committed base — never a
+        // manifest rebase: an overlapping merge's output depends on
+        // base CONTENT, and this read-modify-write is exactly the
+        // window the version CAS has to close.
+        val (modulus, inc) = incs(tag)
+        spark.read.option("basePath", path)
+          .parquet(snap.map(f => s"$path/$f"): _*)
+          .withColumn("cents",
+            when(pmod(col("event_id"), lit(modulus)) === 0,
+              col("cents") + inc).otherwise(col("cents")))
+          .write.mode("overwrite").parquet(s"$path/${stage(tag, n)}")
+        computes(tag) = computes.getOrElse(tag, 0) + 1
+        CommitLog.dataFiles(fs, new Path(root, stage(tag, n)))
+          .map(f => s"${stage(tag, n)}/$f")
+    }
+    MergeConcStats(path, won.map { case (w, (v, _)) => w -> v },
+      won.map { case (w, (_, n)) => w -> n }, computes.toMap)
   }
 
   def mergeConcurrent(spark: SparkSession, dir: String): DataFrame = {
@@ -1178,15 +996,14 @@ object Layout {
     * relative paths. */
   private[graft] def vacuumBelow(spark: SparkSession, path: String,
       keep: Int): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val expired = (0 until keep)
-      .map(v => readManifest(fs, manifestPath(root, v)))
-    val live = readManifest(fs, manifestPath(root, keep)).toSet
-    val doomed = expired.flatten.toSet -- live
-    doomed.foreach(f =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-    (0 until keep).foreach(v => fs.delete(manifestPath(root, v), false))
+    def files(v: Int) =
+      CommitLog.readManifest(fs, CommitLog.manifestPath(root, v)).files
+    val doomed = (0 until keep).flatMap(files).toSet -- files(keep)
+    doomed.foreach(f => fs.delete(new Path(root, f), false))
+    (0 until keep).foreach(v =>
+      fs.delete(CommitLog.manifestPath(root, v), false))
     doomed.toSeq.sorted
   }
 }

@@ -141,7 +141,6 @@ object Similarity {
   // + rerank) — the exact key pins the SEMANTICS that composition must
   // reproduce.
   def simFiltered(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSim.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), col("label"))
     val probes = broadcast(
@@ -590,7 +589,6 @@ object Similarity {
   }
 
   def simPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSim.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val probes = broadcast(probesOf(emb, "probe_id", "pe"))
@@ -754,7 +752,7 @@ object Similarity {
 
   // The graph as a COMMITTED index (VERDICT r15 item 3): the first
   // build per (corpus, params) runs NN-Descent, commits the result as
-  // a `_graft_log`-manifested lakehouse table (AnnIndexStore — stable
+  // a CommitLog-manifested lakehouse table (AnnIndexStore — stable
   // path, footer stats, fingerprint staleness check) and every later
   // serve — in this session, after Caches.releaseAll, or in a COLD
   // JVM — reads the committed files. That is the production split at

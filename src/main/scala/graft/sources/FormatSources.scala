@@ -44,9 +44,15 @@ object FormatSources {
     * local mode that failure stops the SparkContext and cascades into
     * every later key). Per-process paths make the collision
     * impossible instead of merely unlikely. */
-  private[graft] def exportPath(fmt: String, dir: String): String = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_${fmt}_${graft.Util.pathTag(dir)}_p${ProcessHandle.current().pid()}").toString
+  private[graft] def exportPath(fmt: String, dir: String): String =
+    scratchDir(System.getProperty("java.io.tmpdir"), fmt, dir)
+
+  /** `graft_<name>_<dir tag>_p<pid>` under `parent`, deleted at JVM
+    * exit. */
+  private[graft] def scratchDir(parent: String, name: String,
+      dir: String): String = {
+    val p = Paths.get(parent,
+      s"graft_${name}_${graft.Util.pathTag(dir)}_p${ProcessHandle.current().pid()}").toString
     exportDirs.add(p)
     p
   }
@@ -61,16 +67,7 @@ object FormatSources {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       import scala.jdk.CollectionConverters._
-      exportDirs.asScala.foreach { p =>
-        try {
-          val f = new java.io.File(p)
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm))
-            x.delete(); ()
-          }
-          rm(f)
-        } catch { case _: Exception => () } // best-effort scratch sweep
-      }
+      exportDirs.asScala.foreach(p => graft.Util.deleteRecursively(Paths.get(p)))
     }, "graft-export-cleanup"))
   }
 
@@ -189,7 +186,7 @@ object FormatSources {
     val root = Paths.get(exportPath("binfiles", dir))
     val marker = root.resolve("_SUCCESS")
     if (!java.nio.file.Files.exists(marker)) {
-      graft.streaming.Streams.deleteRecursively(root)
+      graft.Util.deleteRecursively(root)
       java.nio.file.Files.createDirectories(root)
       val rootStr = root.toString
       Tables.documents(spark, dir).select("doc_id", "text")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.Util.deleteRecursively
 
 /** Streaming layer — SURVEY.md §2B Q33–Q36.
   *
@@ -270,40 +271,6 @@ object Streams {
   }
   private def ckptDir(prefix: String): java.nio.file.Path =
     Files.createTempDirectory(tmpRoot, prefix)
-
-  /** Streaming checkpoints are per-invocation temp dirs; delete on
-    * completion or each bench/verify run leaks state-store files in
-    * /tmp (ADVICE r3). */
-  private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    // query.stop() returns before the state-store maintenance thread
-    // fully halts; it can drop a fresh snapshot into state/<op>/<part>
-    // between our walk and the directory delete, failing the whole KEY
-    // with DirectoryNotEmptyException (observed ~1-in-4 on
-    // stream_state_ttl's tmpfs checkpoint). Cleanup of a per-run temp
-    // dir is best-effort by definition: retry briefly, then warn and
-    // leak rather than fail the operator.
-    def sweep(): Unit = {
-      val walk = Files.walk(root)
-      // Files.walk holds directory handles until closed (ADVICE r4) —
-      // collect under try/finally, delete after the stream is closed.
-      val paths = try walk.iterator().asScala.toSeq finally walk.close()
-      paths.reverse.foreach(p => Files.deleteIfExists(p))
-    }
-    var attempt = 0
-    while (Files.exists(root)) {
-      attempt += 1
-      try sweep()
-      catch {
-        case e: java.io.IOException if attempt < 4 => Thread.sleep(200)
-        case e: java.io.IOException =>
-          System.err.println(
-            s"[streams] temp checkpoint cleanup leaked $root after " +
-              s"$attempt attempts: $e")
-          return
-      }
-    }
-  }
 
   /** Custom-state sessionization with `flatMapGroupsWithState` — the
     * escape hatch for session logic `session_window` can't express
@@ -1048,12 +1015,13 @@ object Streams {
       .groupBy(window(col("ts"), "10 minutes").as("w"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
       .select(col("w.start").as("ws"), col("n"), col("sum_value"))
-    // deterministic output root, cleared at START of each invocation
-    // (the returned frame reads it lazily, so clearing at the end would
-    // race the caller's terminal action); fresh checkpoint per run so
-    // batch ids restart at 0
-    val outRoot = tmpRoot
-      .resolve(s"graft_fb_out_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
+    // per-(sf dir, process) output root, cleared at START of each
+    // invocation (the returned frame reads it lazily, so clearing at
+    // the end would race the caller's terminal action) and removed at
+    // JVM exit with the export dirs; fresh checkpoint per run so batch
+    // ids restart at 0
+    val outRoot = java.nio.file.Paths.get(graft.sources.FormatSources
+      .scratchDir(tmpRoot.toString, "fb_out", dir))
     deleteRecursively(outRoot)
     Files.createDirectories(outRoot)
     val ckpt = ckptDir("graft_fb_ckpt_")

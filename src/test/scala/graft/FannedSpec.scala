@@ -33,8 +33,7 @@ class FannedSpec extends SparkSpec {
   }
 
   test("fanned is a NO-OP on a splittable (multi-file) input") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("fanned_spec_").toString
+    val tmp = testDir("fanned_spec_").toString
     val name = "mf"
     Tables.documents(spark, sf)
       .repartition(8) // 8 part files -> >= 8 row groups
@@ -52,8 +51,7 @@ class FannedSpec extends SparkSpec {
     // `_`/`.` component below the root, so the footer probe must too —
     // else a half-written job's parts flip a one-row-group table to
     // "splittable" and the fan-out silently turns off
-    val tmp = java.nio.file.Files
-      .createTempDirectory("fanned_spec_tmp_").toString
+    val tmp = testDir("fanned_spec_tmp_").toString
     val table = s"$tmp/t.parquet"
     Tables.documents(spark, sf).coalesce(1)
       .write.mode("overwrite").parquet(table)

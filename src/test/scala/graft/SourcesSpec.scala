@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
 class SourcesSpec extends SparkSpec {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_src_$name").resolve("out").toString
+    testDir(s"graft_src_$name").resolve("out").toString
 
   private def canon(df: DataFrame): Set[String] =
     df.select("doc_id", "lang", "text").collect().map(_.mkString("|")).toSet

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ONE session builder for every test entry point (the scalatest trait
@@ -10,10 +11,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * mains' conf set ([[Session]]) at a fixed 4 cores, so the tested
   * plans are the benchmarked and verified ones on any host. */
 object TestSession {
+  // one warehouse per JVM (every suite's session is the same one),
+  // removed at exit with the export dirs
+  private lazy val warehouse = graft.sources.FormatSources.scratchDir(
+    System.getProperty("java.io.tmpdir"), "wh", "test")
+
   def spark: SparkSession = Session.builder(cores = 4)
     .appName("graft-test")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh_").toString)
+    .config("spark.sql.warehouse.dir", warehouse)
     .getOrCreate()
 }
 
@@ -22,4 +27,20 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  private val testDirs = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
+
+  /** A fresh temp dir, deleted when the current test finishes. */
+  def testDir(prefix: String): java.nio.file.Path = synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    testDirs += d
+    d
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally synchronized {
+      testDirs.foreach(Util.deleteRecursively)
+      testDirs.clear()
+    }
 }

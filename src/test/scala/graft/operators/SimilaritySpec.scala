@@ -678,7 +678,7 @@ class SimilaritySpec extends SparkSpec {
   test("embed_rp over an EMPTY embeddings table: empty result, no crash") {
     // max(size(embedding)) over zero rows is null; the dims bound reads
     // it as 0, so the sign table and the projection are both empty
-    val dir = java.nio.file.Files.createTempDirectory("embed_rp_empty_").toString
+    val dir = testDir("embed_rp_empty_").toString
     Tables.embeddings(spark, sf).limit(0)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.embedRp(spark, dir)

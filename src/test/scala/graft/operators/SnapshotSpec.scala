@@ -15,7 +15,7 @@ class SnapshotSpec extends SparkSpec {
     val path = Layout.snapshotSkipBuild(spark, sf)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = Layout.readManifestStats(fs, new Path(root, "_graft_log/v0.txt"))
+    val entries = CommitLog.readManifest(fs, new Path(root, "_graft_log/v0.txt")).entries
     assert(entries.nonEmpty && entries.forall(_._2.isDefined),
       "every committed file must carry min/max stats")
     val stats = entries.flatMap(_._2)
@@ -60,8 +60,8 @@ class SnapshotSpec extends SparkSpec {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    val v0 = Layout.readManifest(fs, new Path(root, "_graft_log/v0.txt"))
-    val v1 = Layout.readManifest(fs, new Path(root, "_graft_log/v1.txt"))
+    val v0 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v0.txt")).files
+    val v1 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v1.txt")).files
     val (v0Click, v0Rest) = v0.partition(_.startsWith("event_type=click/"))
     val (v1Click, v1Rest) = v1.partition(_.startsWith("event_type=click/"))
 
@@ -105,8 +105,8 @@ class SnapshotSpec extends SparkSpec {
     val path = Layout.snapshotBuild(spark, sf)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v0 = Layout.readManifest(fs, new Path(root, "_graft_log/v0.txt"))
-    val v1 = Layout.readManifest(fs, new Path(root, "_graft_log/v1.txt"))
+    val v0 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v0.txt")).files
+    val v1 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v1.txt")).files
     val before = Layout.readSnapshot(spark, path, 1)
       .orderBy("event_id").collect()
 
@@ -144,9 +144,9 @@ class SnapshotSpec extends SparkSpec {
     assert(stats.attempts(winner) === 1 && stats.attempts(loser) === 2)
 
     val v0 = stats.v0.toSet
-    val v1 = Layout.readManifest(fs, new Path(root, "_graft_log/v1.txt"))
+    val v1 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v1.txt")).files
       .toSet
-    val v2 = Layout.readManifest(fs, new Path(root, "_graft_log/v2.txt"))
+    val v2 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v2.txt")).files
       .toSet
     def part(files: Set[String], p: String): Set[String] =
       files.filter(_.startsWith(s"event_type=$p/"))
@@ -196,14 +196,14 @@ class SnapshotSpec extends SparkSpec {
 
     // v2 references ONLY the loser's second stage (full-rewrite merge
     // on the winner's base); the aborted first stage is deleted
-    val v2 = Layout.readManifest(fs, new Path(root, "_graft_log/v2.txt"))
+    val v2 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v2.txt")).files
       .toSet
     assert(v2.nonEmpty && v2.forall(_.startsWith(s"stage_${loser}_1/")),
       s"v2=$v2")
     assert(!fs.exists(new Path(root, s"stage_${loser}_0")),
       "the loser's aborted stage must be deleted on conflict")
     // v1 = the winner's merge over v0
-    val v1 = Layout.readManifest(fs, new Path(root, "_graft_log/v1.txt"))
+    val v1 = CommitLog.readManifest(fs, new Path(root, "_graft_log/v1.txt")).files
       .toSet
     assert(v1.nonEmpty && v1.forall(_.startsWith(s"stage_${winner}_0/")))
     assert(!fs.exists(new Path(root, "_graft_log/v3.txt")))

@@ -49,8 +49,7 @@ class StreamMergeSpec extends SparkSpec {
     // the empty-batch early return need their own pins.
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_mtc_spec_").toString
+    val path = testDir("graft_mtc_spec_").toString
     Seq((1L, "click", 10L, 100L), (2L, "view", 20L, 200L))
       .toDF("event_id", "event_type", "user_id", "cents")
       .write.mode("overwrite").partitionBy("event_type").parquet(path)

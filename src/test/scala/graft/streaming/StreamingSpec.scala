@@ -33,7 +33,7 @@ class StreamingSpec extends SparkSpec
     p
   }
   override def afterAll(): Unit = {
-    tmpDirs.foreach(Streams.deleteRecursively)
+    tmpDirs.foreach(graft.Util.deleteRecursively)
     super.afterAll()
   }
 
