@@ -97,17 +97,7 @@ object AnnIndexStore {
     // same atomic rename as the file list — fp and files can't skew)
     val m = CommitLog.readManifest(hfs, mf)
     if (!m.headers.headOption.contains(fpHeader(fp))) return None
-    if (m.files.nonEmpty)
-      Some(spark.read.parquet(m.files.map(f => s"${r.toString}/$f"): _*))
-    else {
-      val sp = CommitLog.sidecarPath(r, "schema.json")
-      if (!hfs.exists(sp)) return None
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(CommitLog.readFile(hfs, sp))
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      Some(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    }
+    CommitLog.read(spark, hfs, r, m.files)
   }
 
   /** Writes `df` as the index artifact and publishes it: range-layout
@@ -140,10 +130,9 @@ object AnnIndexStore {
     df.repartitionByRange(org.apache.spark.sql.functions.col(statsCol))
       .write.mode("overwrite").parquet(dataDir.toString)
     val files = CommitLog.dataFiles(hfs, dataDir).map(f => s"$ver/$f")
-    // schema sidecar: lets an EMPTY artifact (zero data files) read
-    // back with the right schema instead of failing inference
-    CommitLog.publishFile(hfs, CommitLog.sidecarPath(r, "schema.json"),
-      df.schema.json, CommitLog.Replace)
+    // lets an EMPTY artifact (zero data files) read back with the
+    // right schema instead of failing inference
+    CommitLog.publishSchema(hfs, r, df.schema)
     // manifest body — fingerprint HEADER first, then the file lines —
     // in ONE atomic replace: readers see the previous complete commit
     // or this complete commit, never a prefix, never a fingerprint

@@ -3,7 +3,8 @@ package graft.operators
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The one on-disk table format of the engine: a directory of
   * immutable parquet files plus `_graft_log/vN.txt` version manifests,
@@ -54,9 +55,9 @@ object CommitLog {
   def manifestPath(root: Path, v: Int): Path =
     new Path(new Path(root, LogDir), s"v$v.txt")
 
-  /** A small file kept beside the manifests (an index's schema). */
-  def sidecarPath(root: Path, name: String): Path =
-    new Path(new Path(root, LogDir), name)
+  /** The table's schema, kept beside the manifests. */
+  private def schemaPath(root: Path): Path =
+    new Path(new Path(root, LogDir), "schema.json")
 
   /** Where a publish of `dst` stages its body: dot-prefixed and
     * `.tmp`-suffixed, so neither [[latest]] nor a parquet read takes it
@@ -175,6 +176,23 @@ object CommitLog {
           if mode == Exclusive => false
     } finally rfs.delete(tmp, false)
   }
+
+  /** Publishes the table's schema, so a version that lists no data
+    * files still reads back with it ([[read]]). */
+  def publishSchema(fs: FileSystem, root: Path, schema: StructType): Unit =
+    publishFile(fs, schemaPath(root), schema.json, Replace)
+
+  /** The frame of `files` (root-relative; partition columns recovered
+    * from the paths). Zero files read as an empty frame with the
+    * published schema — None when the table published none. */
+  def read(spark: SparkSession, fs: FileSystem, root: Path,
+      files: Seq[String]): Option[DataFrame] =
+    if (files.nonEmpty)
+      Some(spark.read.option("basePath", root.toString)
+        .parquet(files.map(f => s"$root/$f"): _*))
+    else if (!raw(fs).exists(schemaPath(root))) None
+    else Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      DataType.fromJson(readFile(fs, schemaPath(root))).asInstanceOf[StructType]))
 
   /** Publishes version `v` of the table at `root`: `headers` first,
     * then one line per file (sorted), with its stats where it has any. */

@@ -690,16 +690,11 @@ object EventAnalytics {
   // 1933 / Smirnov 1939): D = max_x |F1(x) − F2(x)| between the
   // user-parity halves' value distributions — the CONTINUOUS drift
   // test completing stat_chi2's categorical one (the pair every
-  // feature-drift monitor runs). Scale shape: per-distinct-value
-  // side counts are ONE value-keyed partial-agg shuffle; the global
-  // CDF is a TWO-LEVEL prefix sum (the seq_pack pattern) — per-bucket
-  // totals onto a bounded value-range bucket axis, running offsets
-  // over that tiny frame, then per-bucket local windows — never a
-  // single-partition global sort; the distinct-value frame PERSISTS
-  // (Caches-registered) because the bucket-totals branch and the CDF
-  // probe both consume it — without the persist each branch would
-  // re-scan and re-aggregate the fact; totals then derive from the
-  // bounded bucket frame (no second corpus scan) and broadcast.
+  // feature-drift monitor runs). Scale shape: the persisted
+  // per-distinct-value side counts (`parityCounts`), then the global
+  // CDF as `Prefix.runningSums` over the bounded value-range bucket
+  // axis — never a single-partition global sort; totals derive from
+  // the bucket frame (no second corpus scan) and broadcast.
   // Determinism:
   // D's maximization runs entirely in EXACT integers — at x the
   // unnormalized gap is |ca·n2 − cb·n1| (BIGINT; exact while
@@ -709,29 +704,14 @@ object EventAnalytics {
   // anywhere). Output: the 1-row (d_num, n1, n2, value_at) exact
   // fraction — D = d_num/(n1·n2) is the consumer's one division.
   def statKs(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Caches.persist(Tables.events(spark, dir)
-      .filter(col("value").isNotNull)
-      .select(col("value"), pmod(col("user_id"), lit(2L)).as("side"))
-      .groupBy(col("value"))
-      .agg(
-        sum(when(col("side") === 0L, lit(1L)).otherwise(lit(0L))).as("a"),
-        sum(when(col("side") === 1L, lit(1L)).otherwise(lit(0L))).as("b"))
-      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
-    val bktTot = pts.groupBy(col("bkt"))
+    val pts = parityCounts(spark, dir)
+    // via the bucket totals, so the plan reuses the kernel's bucket
+    // exchange instead of scanning pts a third time
+    val totals = pts.groupBy(col("bkt"))
       .agg(sum(col("a")).as("ba"), sum(col("b")).as("bb"))
-    val wB = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bktTot
-      .withColumn("oa", coalesce(sum(col("ba")).over(wB), lit(0L)))
-      .withColumn("ob", coalesce(sum(col("bb")).over(wB), lit(0L)))
-      .select(col("bkt"), col("oa"), col("ob"))
-    val totals = bktTot
       .agg(sum(col("ba")).as("n1"), sum(col("bb")).as("n2"))
-    val wL = Window.partitionBy("bkt").orderBy("value")
-    pts
-      .join(broadcast(offsets), Seq("bkt"))
-      .withColumn("ca", col("oa") + sum(col("a")).over(wL))
-      .withColumn("cb", col("ob") + sum(col("b")).over(wL))
+    Prefix.runningSums(pts, Nil, Seq("bkt"), Seq("value"),
+        Seq("ca" -> col("a"), "cb" -> col("b")), boundedBuckets = true)
       .join(broadcast(totals))
       .select(
         abs(col("ca") * col("n2") - col("cb") * col("n1")).as("diff"),
@@ -744,18 +724,48 @@ object EventAnalytics {
         (col("m.negv") * lit(-1.0)).as("value_at"))
   }
 
+  // Per-distinct-value side counts (value, a, b) plus the bounded
+  // value-range bucket `bkt` of the two-level prefix sum — ONE
+  // value-keyed partial-agg shuffle. Persisted: the kernel's bucket
+  // totals and its running-sum probe both consume it, and without the
+  // persist each branch would re-scan and re-aggregate the fact.
+  private def valueCounts(ev: DataFrame, a: Column, b: Column): DataFrame =
+    Caches.persist(ev.filter(col("value").isNotNull)
+      .groupBy(col("value")).agg(sum(a).as("a"), sum(b).as("b"))
+      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
+
+  // (value, a, b) over the user-parity halves: a counts even user_ids,
+  // b odd ones — the two samples stat_ks and stat_mannwhitney compare.
+  private def parityCounts(spark: SparkSession, dir: String): DataFrame = {
+    val side = pmod(col("user_id"), lit(2L))
+    valueCounts(Tables.events(spark, dir),
+      when(side === 0L, lit(1L)).otherwise(lit(0L)),
+      when(side === 1L, lit(1L)).otherwise(lit(0L)))
+  }
+
+  // The doubled-midrank rank-sum reduction over valueCounts' frame:
+  // with t = a + b rows at a value and c the rows strictly before it,
+  // the doubled midrank is m2 = 2·c + t + 1 (an exact BIGINT), and the
+  // 1-row result is (r2 = Σ a·m2, n_a, n_b, tie_t = Σ t³ − t).
+  private def midrankSums(pts: DataFrame): DataFrame =
+    Prefix.runningSums(pts.withColumn("t", col("a") + col("b")), Nil,
+        Seq("bkt"), Seq("value"), Seq("cum" -> col("t")),
+        boundedBuckets = true)
+      .withColumn("m2", lit(2L) * (col("cum") - col("t")) + col("t") + lit(1L))
+      .agg(sum(col("a") * col("m2")).as("r2"),
+        sum(col("a")).as("n_a"), sum(col("b")).as("n_b"),
+        sum(col("t") * col("t") * col("t") - col("t")).as("tie_t"))
+
   // `stat_mannwhitney` — two-sample Mann-Whitney U rank-sum test
   // (Mann & Whitney 1947; Wilcoxon 1945) between the user-parity
   // halves' value distributions — completing the drift/hypothesis
   // trio (stat_chi2 categorical, stat_ks distributional shape, this
   // one location shift) with the RANK-based test that tolerates
   // heavy tails where a t-test does not. Tied values take midranks.
-  // Scale shape: identical machinery to stat_ks — per-distinct-value
-  // side counts are ONE value-keyed partial-agg shuffle into a
-  // persisted frame, the strictly-before cumulative count is the
-  // two-level prefix sum (bounded bucket offsets broadcast,
-  // per-bucket exclusive windows), and the statistic is a 1-row
-  // reduce of exact-integer products. Determinism: midranks are
+  // Scale shape: stat_ks's `parityCounts`, then `midrankSums` — the
+  // strictly-before cumulative count is `Prefix.runningSums` minus
+  // the row's own count, and the statistic is a 1-row reduce of
+  // exact-integer products. Determinism: midranks are
   // fractional halves, so EVERYTHING carries DOUBLED ranks —
   // m2 = 2·c_before + t + 1 is an exact BIGINT, the doubled rank sum
   // R2 = Σ a·m2 and doubled U2 = R2 − n1·(n1+1) are exact (bounds:
@@ -763,38 +773,11 @@ object EventAnalytics {
   // the heaviest tie group t < 2·10⁶ — documented switch-to-double
   // past that). The consumer's z-score is one division away from
   // (u2_a, n1, n2, tie_t); no float appears before the output.
-  def statMannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Caches.persist(Tables.events(spark, dir)
-      .filter(col("value").isNotNull)
-      .select(col("value"), pmod(col("user_id"), lit(2L)).as("side"))
-      .groupBy(col("value"))
-      .agg(
-        sum(when(col("side") === 0L, lit(1L)).otherwise(lit(0L))).as("a"),
-        sum(when(col("side") === 1L, lit(1L)).otherwise(lit(0L))).as("b"))
-      .withColumn("t", col("a") + col("b"))
-      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
-    val bktTot = pts.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
-    val wB = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bktTot
-      .withColumn("off", coalesce(sum(col("bt")).over(wB), lit(0L)))
-      .select(col("bkt"), col("off"))
-    // exclusive per-bucket running count: rows strictly before this
-    // distinct value inside the bucket
-    val wL = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    pts
-      .join(broadcast(offsets), Seq("bkt"))
-      .withColumn("cb4",
-        col("off") + coalesce(sum(col("t")).over(wL), lit(0L)))
-      .withColumn("m2", lit(2L) * col("cb4") + col("t") + lit(1L))
-      .agg(sum(col("a") * col("m2")).as("r2_a"),
-        sum(col("a")).as("n1"), sum(col("b")).as("n2"),
-        sum(col("t") * col("t") * col("t") - col("t")).as("tie_t"))
-      .select(col("r2_a"),
-        (col("r2_a") - col("n1") * (col("n1") + lit(1L))).as("u2_a"),
-        col("n1"), col("n2"), col("tie_t"))
-  }
+  def statMannWhitney(spark: SparkSession, dir: String): DataFrame =
+    midrankSums(parityCounts(spark, dir))
+      .select(col("r2").as("r2_a"),
+        (col("r2") - col("n_a") * (col("n_a") + lit(1L))).as("u2_a"),
+        col("n_a").as("n1"), col("n_b").as("n2"), col("tie_t"))
 
   def tsEwma(spark: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -1606,11 +1589,9 @@ object EventAnalytics {
   // Labels are a deterministic md5 draw on event_id ORed with a
   // score-correlated band (value ≥ 90) so the fixture AUC is
   // meaningfully > 0.5; the score is `value` itself. Scale shape:
-  // identical machinery to stat_mannwhitney — per-distinct-score
-  // (pos, neg) counts are ONE value-keyed partial-agg shuffle into a
-  // persisted frame, the strictly-before cumulative is the two-level
-  // prefix sum (bounded bucket offsets broadcast, per-bucket
-  // exclusive windows), never one global sort partition. Determinism:
+  // stat_mannwhitney's `midrankSums` over per-distinct-score
+  // (pos, neg) `valueCounts` — never one global sort partition.
+  // Determinism:
   // ties take midranks, so everything carries DOUBLED ranks — u2_pos
   // = R2 − n_pos·(n_pos+1) is an exact BIGINT; the render divides
   // once at the end, u2::double / (2.0·n_pos·n_neg) — IEEE division
@@ -1619,31 +1600,11 @@ object EventAnalytics {
   def evalAuc(spark: SparkSession, dir: String): DataFrame = {
     val hex = conv(substring(md5(col("event_id").cast("string")), 1, 1),
       16, 10).cast("long")
-    val pts = Caches.persist(Tables.events(spark, dir)
-      .filter(col("value").isNotNull)
-      .select(col("value"),
-        ((hex < 4L) || (col("value") >= 90.0)).cast("long").as("pos"))
-      .groupBy(col("value"))
-      .agg(sum(col("pos")).as("a"),
-        sum(lit(1L) - col("pos")).as("b"))
-      .withColumn("t", col("a") + col("b"))
-      .withColumn("bkt", floor(col("value") / lit(8.0)).cast("long")))
-    val bktTot = pts.groupBy(col("bkt")).agg(sum(col("t")).as("bt"))
-    val wB = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bktTot
-      .withColumn("off", coalesce(sum(col("bt")).over(wB), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val wL = Window.partitionBy("bkt").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val agg = pts
-      .join(broadcast(offsets), Seq("bkt"))
-      .withColumn("cb4",
-        col("off") + coalesce(sum(col("t")).over(wL), lit(0L)))
-      .withColumn("m2", lit(2L) * col("cb4") + col("t") + lit(1L))
-      .agg(sum(col("a") * col("m2")).as("r2_pos"),
-        sum(col("a")).as("n_pos"), sum(col("b")).as("n_neg"),
-        sum(col("t") * col("t") * col("t") - col("t")).as("tie_t"))
+    val pos = ((hex < 4L) || (col("value") >= 90.0)).cast("long")
+    val agg = midrankSums(valueCounts(Tables.events(spark, dir),
+        pos, lit(1L) - pos))
+      .select(col("r2").as("r2_pos"), col("n_a").as("n_pos"),
+        col("n_b").as("n_neg"), col("tie_t"))
     val u2 = col("r2_pos") - col("n_pos") * (col("n_pos") + lit(1L))
     agg.select(col("n_pos"), col("n_neg"), u2.as("u2_pos"), col("tie_t"),
       floor(u2.cast("double") /

@@ -667,7 +667,8 @@ object Layout {
       CommitLog.footerStats(spark, root, files, "event_id"))
 
   /** Snapshot read: the manifest's file list, partition columns
-    * recovered from the paths via basePath. */
+    * recovered from the paths via basePath; a version that lists no
+    * files reads as an empty frame with the table's schema. */
   private[graft] def readSnapshot(spark: SparkSession, path: String,
       v: Int): DataFrame =
     readSnapshotPruned(spark, path, v, Long.MinValue, Long.MaxValue)._1
@@ -677,6 +678,7 @@ object Layout {
     val (path, root, fs) = freshTable(spark, "snapshot", dir)
     val base = centsBase(spark, dir)
     base.write.partitionBy("event_type").parquet(path)
+    CommitLog.publishSchema(fs, root, base.schema)
     val v0 = CommitLog.dataFiles(fs, root)
     commitWithStats(spark, fs, root, 0, v0)
 
@@ -753,9 +755,9 @@ object Layout {
   private[graft] def snapshotSkipBuild(spark: SparkSession,
       dir: String): String = {
     val (path, root, fs) = freshTable(spark, "snapskip", dir)
-    centsBase(spark, dir)
-      .repartitionByRange(8, col("event_id"))
-      .write.parquet(path)
+    val base = centsBase(spark, dir)
+    base.repartitionByRange(8, col("event_id")).write.parquet(path)
+    CommitLog.publishSchema(fs, root, base.schema)
     commitWithStats(spark, fs, root, 0, CommitLog.dataFiles(fs, root))
     path
   }
@@ -774,8 +776,9 @@ object Layout {
     val kept = entries.collect {
       case (f, st) if st.forall { case (mn, mx) => mx >= lo && mn <= hi } => f
     }
-    val df = spark.read.option("basePath", path)
-      .parquet(kept.map(f => s"$path/$f"): _*)
+    val df = CommitLog.read(spark, fs, root, kept).getOrElse(
+      throw new IllegalStateException(
+        s"snapshot $path v$v lists no files and has no published schema"))
     (df, kept.size, entries.size)
   }
 
@@ -785,12 +788,14 @@ object Layout {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stats = CommitLog.readManifest(fs, CommitLog.manifestPath(root, 0))
       .entries.flatMap(_._2)
-    val (mn, mx) = (stats.map(_._1).min, stats.map(_._2).max)
     // quartile-wide slice [mn + span/4, mn + 3·span/8] — scale-free, and
     // derived from the manifest alone (truncating div: both bounds
-    // positive, so Spark div ≡ DuckDB // in the oracle's replay)
-    val lo = mn + (mx - mn) / 4
-    val hi = mn + 3L * (mx - mn) / 8
+    // positive, so Spark div ≡ DuckDB // in the oracle's replay). No
+    // stats means no rows: the slice is empty.
+    val (lo, hi) = if (stats.isEmpty) (0L, -1L) else {
+      val (mn, mx) = (stats.map(_._1).min, stats.map(_._2).max)
+      (mn + (mx - mn) / 4, mn + 3L * (mx - mn) / 8)
+    }
     val (df, _, _) = readSnapshotPruned(spark, path, 0, lo, hi)
     df.filter(col("event_id") >= lo && col("event_id") <= hi)
       .select("event_id", "user_id", "cents", "event_type")
@@ -874,6 +879,7 @@ object Layout {
     val (path, root, fs) = freshTable(spark, "snapconc", dir)
     val base = centsBase(spark, dir)
     base.write.partitionBy("event_type").parquet(path)
+    CommitLog.publishSchema(fs, root, base.schema)
     val v0 = CommitLog.dataFiles(fs, root)
     commitVersion(fs, root, 0, v0)
 
@@ -953,7 +959,9 @@ object Layout {
   private[graft] def mergeConcBuild(spark: SparkSession,
       dir: String): MergeConcStats = {
     val (path, root, fs) = freshTable(spark, "mergeconc", dir)
-    centsBase(spark, dir).write.parquet(path)
+    val base = centsBase(spark, dir)
+    base.write.parquet(path)
+    CommitLog.publishSchema(fs, root, base.schema)
     commitVersion(fs, root, 0, CommitLog.dataFiles(fs, root))
 
     val incs = Map("a" -> (3, 10L), "b" -> (5, 100L)) // modulus, +cents
@@ -969,8 +977,7 @@ object Layout {
         // base CONTENT, and this read-modify-write is exactly the
         // window the version CAS has to close.
         val (modulus, inc) = incs(tag)
-        spark.read.option("basePath", path)
-          .parquet(snap.map(f => s"$path/$f"): _*)
+        CommitLog.read(spark, fs, root, snap).get
           .withColumn("cents",
             when(pmod(col("event_id"), lit(modulus)) === 0,
               col("cents") + inc).otherwise(col("cents")))

@@ -328,30 +328,21 @@ object TextAnalysis {
   // ascending by length): G = (2·Σr·x − (n+1)·Σx) / (n·Σx) — tied
   // lengths contribute identically under any tie permutation, so the
   // (n_chars, doc_id) total order makes the statistic deterministic
-  // without affecting its value. Scale shape: the global rank is the
-  // id_assign two-level pattern — bounded length-range bucket counts,
-  // running offsets over that tiny frame (broadcast), per-bucket
-  // row_number windows — never one global sort partition; the final
-  // reduce is three BIGINT sums. Determinism: EVERYTHING before the
-  // render is exact integer arithmetic (Σr·x bounded by n·max_rank·
-  // max_len < 2^63 up to ~10⁸ docs of 10⁵ chars — documented bound);
+  // without affecting its value. Scale shape: the global rank is
+  // `Prefix.runningSums` of 1 over the bounded length-range bucket
+  // axis — never one global sort partition; the final reduce is three
+  // BIGINT sums. Determinism: EVERYTHING before the render is exact
+  // integer arithmetic (Σr·x bounded by n·max_rank·max_len < 2^63 up
+  // to ~10⁸ docs of 10⁵ chars — documented bound);
   // the render is one double division of two exact integers emitted
   // floor(x·1e6) — the halfway-safe integer render.
   def corpusGini(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"))
       .withColumn("bkt", expr("n_chars DIV 64"))
-    val bktCnt = docs.groupBy(col("bkt")).agg(count(lit(1)).as("bc"))
-    val wB = Window.orderBy("bkt")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = bktCnt
-      .withColumn("off", coalesce(sum(col("bc")).over(wB), lit(0L)))
-      .select(col("bkt"), col("off"))
-    val wL = Window.partitionBy("bkt").orderBy("n_chars", "doc_id")
     val num = lit(2L) * col("srx") - (col("n") + lit(1L)) * col("sx")
-    docs
-      .join(broadcast(offs), Seq("bkt"))
-      .withColumn("r", col("off") + row_number().over(wL).cast("long"))
+    Prefix.runningSums(docs, Nil, Seq("bkt"), Seq("n_chars", "doc_id"),
+        Seq("r" -> lit(1L)), boundedBuckets = true)
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sx"),
         sum(col("r") * col("n_chars")).as("srx"))
       .select(col("n"), col("sx"), col("srx"),
@@ -593,54 +584,28 @@ object TextAnalysis {
   // windowed form covers the distributed shape and is exactly
   // oracle-replayable.)
   //
-  // Scale shape: the running sum is a TWO-LEVEL prefix sum, never a
+  // Scale shape: the running sum is `Prefix.runningSums`, never a
   // single per-lang window. A `Window.partitionBy("lang")` cumsum caps
   // parallelism at |languages| — at 100 TB each language's whole corpus
-  // would funnel through ONE task's sort. Instead (the `seq_shuffle`
-  // trick, associativity makes the output bit-identical):
-  //   1. cumsum within (lang, shard = doc_id DIV 1000) — parallelism
-  //      scales with corpus size, every shard sorts independently;
-  //   2. per-shard totals → exclusive prefix sum over the tiny
-  //      (lang, shard) frame (one row per shard — coordination stays
-  //      small while the per-doc work stays distributed);
-  //   3. cum = shard offset + within-shard cumsum.
+  // would funnel through ONE task's sort. The kernel's buckets are
+  // shard = doc_id DIV 1000, so every shard sorts independently and
+  // only the one-row-per-(lang, shard) offsets frame is per-lang.
   def seqPack(spark: SparkSession, dir: String): DataFrame = {
     val nTok = size(toks).cast("long")
     packBins(Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), nTok.as("n_tok")))
   }
 
-  /** Two-level per-lang running-cumsum bin packing over a frame with
-    * columns (doc_id, lang, n_tok) — shared by `seq_pack` and
-    * `pipeline_corpus` stage 5. Output is identical to a global
-    * per-lang `sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id)`
-    * (running sums are associative), but the doc-level window
-    * partitions by (lang, shard) so parallelism scales with data, not
-    * language count. PlanSpec pins the shape.
+  /** Per-lang running-cumsum bin packing over a frame with columns
+    * (doc_id, lang, n_tok) — shared by `seq_pack` and `pipeline_corpus`
+    * stage 5. The cumsum is `Prefix.runningSums` by lang over the
+    * growing shard axis; PlanSpec pins the shape.
     */
   private[graft] def packBins(docs: DataFrame): DataFrame = {
     val budget = 2048L
-    val wShard = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang", "shard").orderBy("doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val wOff = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy("shard")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val sharded = docs
-      .withColumn("shard", expr("doc_id DIV 1000"))
-      .withColumn("cum_in", sum(col("n_tok")).over(wShard))
-    // one row per (lang, shard) — the exclusive-offset frame is tiny
-    val offsets = sharded.groupBy("lang", "shard")
-      .agg(sum(col("n_tok")).as("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(wOff), lit(0L)))
-      .select(col("lang").as("o_lang"), col("shard").as("o_shard"), col("off"))
-    // null-safe lang equality: Window.partitionBy groups NULL langs
-    // together, so the offset join must match them too — a plain
-    // equi-join would silently DROP null-lang rows the single-window
-    // formulation (and the oracle) keeps
-    sharded.join(offsets,
-        col("lang") <=> col("o_lang") && col("shard") === col("o_shard"))
-      .withColumn("cum", col("off") + col("cum_in"))
+    Prefix.runningSums(docs.withColumn("shard", expr("doc_id DIV 1000")),
+        Seq("lang"), Seq("shard"), Seq("doc_id"), Seq("cum" -> col("n_tok")),
+        boundedBuckets = false)
       .select(col("doc_id"), col("lang"), col("n_tok"),
         ((col("cum") - col("n_tok")) / budget).cast("long").as("bin_id"),
         pmod(col("cum") - col("n_tok"), lit(budget)).as("bin_off"))
@@ -894,30 +859,18 @@ object TextAnalysis {
   // corpus-wide ORDER BY hash is a single-partition window (the classic
   // scale trap). The distributed shape used here:
   //   1. bucket = first byte of md5(doc_id)  (256 uniform buckets);
-  //   2. rank within bucket by (md5, doc_id) — a PARTITIONED window,
-  //      every bucket sorts independently;
-  //   3. bucket offsets = prefix sum over the 256-row bucket-count
-  //      frame (a window over 256 rows — coordination stays tiny while
-  //      the per-doc work stays distributed);
-  //   4. pos = offset + rank − 1.
+  //   2. pos = `Prefix.runningSums` of 1 over that bounded bucket axis,
+  //      ordered by (md5, doc_id), minus 1 — every bucket sorts
+  //      independently, only the 256-row offsets frame is global.
   // md5 (identical bytes in every engine) keeps the permutation
   // SQL-replayable; a production run would salt it with the epoch.
   def seqShuffle(spark: SparkSession, dir: String): DataFrame = {
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy("bucket").orderBy("h", "doc_id")
-    val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy("bucket").rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val ranked = Tables.documents(spark, dir)
+    val hashed = Tables.documents(spark, dir)
       .select(col("doc_id"), md5(col("doc_id").cast("string")).as("h"))
       .withColumn("bucket", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
-      .withColumn("rk", row_number().over(wB))
-    val offsets = ranked.groupBy("bucket").agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(wOff), lit(0L)))
-      .select("bucket", "off")
-    ranked.join(offsets, Seq("bucket"))
-      .select(col("doc_id"), col("bucket"),
-        (col("off") + col("rk") - 1).as("pos"))
+    Prefix.runningSums(hashed, Nil, Seq("bucket"), Seq("h", "doc_id"),
+        Seq("rk" -> lit(1L)), boundedBuckets = true)
+      .select(col("doc_id"), col("bucket"), (col("rk") - 1).as("pos"))
       .orderBy("doc_id")
   }
 
@@ -1055,36 +1008,22 @@ object TextAnalysis {
   // The naive formulation — row_number() over an un-partitioned window
   // — funnels the entire corpus through ONE task (the classic global-
   // sort bottleneck); monotonically_increasing_id is distributed but
-  // neither contiguous nor order-stable. The scalable shape is the
-  // packBins two-level prefix sum: per-(lang, shard) LOCAL row numbers
-  // (shard = doc_id DIV 1000 — monotone in the order key, so shard
-  // order IS global order), plus an exclusive running offset over the
-  // per-shard counts. Only the offsets frame (rows / shard_size
-  // entries) rides the single-partition window — at corpus sizes where
-  // even THAT frame is large, the same reduction applies recursively;
-  // the corpus itself is touched by one (lang, shard)-keyed exchange.
-  // global_id is 1-based, matching the oracle's row_number.
-  def idAssign(spark: SparkSession, dir: String): DataFrame = {
-    val wLocal = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang", "shard").orderBy("doc_id")
-    val wOff = org.apache.spark.sql.expressions.Window
-      .orderBy("o_lang", "o_shard")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val sharded = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"))
-      .withColumn("shard", expr("doc_id DIV 1000"))
-      .withColumn("local_rn", row_number().over(wLocal).cast("long"))
-    val offsets = sharded.groupBy("lang", "shard")
-      .agg(count(lit(1)).as("n"))
-      .select(col("lang").as("o_lang"), col("shard").as("o_shard"), col("n"))
-      .withColumn("off", coalesce(sum(col("n")).over(wOff), lit(0L)))
-    // null-safe lang match, same rationale as packBins
-    sharded.join(offsets,
-        col("lang") <=> col("o_lang") && col("shard") === col("o_shard"))
-      .select(col("doc_id"), col("lang"),
-        (col("off") + col("local_rn")).as("global_id"))
+  // neither contiguous nor order-stable. The scalable shape is
+  // `Prefix.runningSums` of 1 over the growing (lang, shard) bucket
+  // axis (shard = doc_id DIV 1000 — monotone in the order key, so
+  // bucket order IS global order). Only the offsets frame (rows /
+  // shard_size entries) rides the single-partition window — at corpus
+  // sizes where even THAT frame is large, the same reduction applies
+  // recursively. global_id is 1-based, matching the oracle's
+  // row_number.
+  def idAssign(spark: SparkSession, dir: String): DataFrame =
+    Prefix.runningSums(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"))
+        .withColumn("shard", expr("doc_id DIV 1000")),
+        Nil, Seq("lang", "shard"), Seq("doc_id"), Seq("global_id" -> lit(1L)),
+        boundedBuckets = false)
+      .select(col("doc_id"), col("lang"), col("global_id"))
       .orderBy("global_id")
-  }
 
   // `str_mask` — format-preserving data masking (`mask()`): the
   // PII-safe DISPLAY transform — upper→X lower→x digit→n keeps the

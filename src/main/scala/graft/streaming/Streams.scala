@@ -272,6 +272,10 @@ object Streams {
   private def ckptDir(prefix: String): java.nio.file.Path =
     Files.createTempDirectory(tmpRoot, prefix)
 
+  /** The demo streams' event time: `hhmm` on 2024-01-01. */
+  private def t(hhmm: String): Timestamp =
+    Timestamp.valueOf(s"2024-01-01 $hhmm:00")
+
   /** Custom-state sessionization with `flatMapGroupsWithState` — the
     * escape hatch for session logic `session_window` can't express
     * (per-session custom accumulators, mid-session emission, dynamic
@@ -398,7 +402,6 @@ object Streams {
     val s = demoSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val input = MemoryStream[(Long, Timestamp, Double)]
     val deduped = input.toDF().toDF("event_id", "ts", "value")
       .withWatermark("ts", "10 minutes")
@@ -433,7 +436,6 @@ object Streams {
     val s = demoSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val impressions = MemoryStream[(Long, Timestamp)]
     val clicks = MemoryStream[(Long, Timestamp)]
     val imp = impressions.toDF().toDF("ad_id", "imp_ts")
@@ -544,8 +546,6 @@ object Streams {
     val s = demoSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
 
     val input = MemoryStream[(Timestamp, Double)]
     val agg = input.toDF().toDF("ts", "value")
@@ -709,7 +709,6 @@ object Streams {
     val s = demoSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val impressions = MemoryStream[(Long, Timestamp)]
     val clicks = MemoryStream[(Long, Timestamp)]
     val imp = impressions.toDF().toDF("ad_id", "imp_ts")
@@ -764,7 +763,6 @@ object Streams {
     val s = demoSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val input = MemoryStream[(Timestamp, Double)]
     val agg = input.toDF().toDF("ts", "value")
       .groupBy(window(col("ts"), "10 minutes").as("w"))
@@ -802,7 +800,6 @@ object Streams {
     val s = rocksSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val input = MemoryStream[(Long, Timestamp, Double)]
     val out = input.toDS()
       .groupByKey(_._1)
@@ -909,21 +906,6 @@ object Streams {
     s.table(name).orderBy("user_id", "sum_value")
   }
 
-  // `stream_foreachbatch` — the foreachBatch sink: THE production sink
-  // API. Everything Spark has no native sink for routes through it
-  // (JDBC upserts, multi-table fan-out, dedupe-merge into a lakehouse
-  // table), and its correctness discipline is the operator's contract:
-  //  1. the sink receives (batchDF, batchId) and must be IDEMPOTENT by
-  //     batchId — the engine guarantees at-least-once delivery, so a
-  //     redelivered id must no-op for end-to-end exactly-once;
-  //  2. a batch consumed more than once inside the function is
-  //     persisted first (here: written then counted — two actions).
-  // The demo runs an update-mode windowed agg whose per-batch UPDATE
-  // rows land in a parquet emission log partitioned by batch_id
-  // (discovery turns the dir name back into a column), then PROVES the
-  // idempotent-skip by replaying a poisoned frame under an
-  // already-written batch id after the query stops — if the skip ever
-  // broke, the poison rows would surface in the pinned output.
   // `stream_merge_cdc` — the streaming half of the lakehouse MERGE:
   // a CDC changelog arrives as a stream and every micro-batch MERGEs
   // into the partitioned parquet target via foreachBatch — exactly the
@@ -1005,11 +987,25 @@ object Streams {
       .orderBy("event_id")
   }
 
+  // `stream_foreachbatch` — the foreachBatch sink: THE production sink
+  // API. Everything Spark has no native sink for routes through it
+  // (JDBC upserts, multi-table fan-out, dedupe-merge into a lakehouse
+  // table), and its correctness discipline is the operator's contract:
+  //  1. the sink receives (batchDF, batchId) and must be IDEMPOTENT by
+  //     batchId — the engine guarantees at-least-once delivery, so a
+  //     redelivered id must no-op for end-to-end exactly-once;
+  //  2. a batch consumed more than once inside the function is
+  //     persisted first (here: written then counted — two actions).
+  // The demo runs an update-mode windowed agg whose per-batch UPDATE
+  // rows land in a parquet emission log partitioned by batch_id
+  // (discovery turns the dir name back into a column), then PROVES the
+  // idempotent-skip by replaying a poisoned frame under an
+  // already-written batch id after the query stops — if the skip ever
+  // broke, the poison rows would surface in the pinned output.
   def streamForeachBatch(spark: SparkSession, dir: String): DataFrame = {
     val s = demoSession(spark)
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    def t(hhmm: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
     val input = MemoryStream[(Timestamp, Double)]
     val agg = input.toDF().toDF("ts", "value")
       .groupBy(window(col("ts"), "10 minutes").as("w"))

@@ -621,26 +621,25 @@ class SimilaritySpec extends SparkSpec {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // spec-local kind → spec-local root; wipe any prior run's commit
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_annidx_specempty_${graft.Util.pathTag(sf)}")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(root)
-    val c0 = AnnIndexStore.commits.get()
-    val served = AnnIndexStore.serve(spark, "specempty", sf,
-      "specempty.v1", "v")(empty)
-    assert(served.count() === 0L)
-    assert(served.schema.fieldNames.toSeq === Seq("lvl", "v"))
-    assert(AnnIndexStore.commits.get() === c0 + 1)
-    val served2 = AnnIndexStore.serve(spark, "specempty", sf,
-      "specempty.v1", "v")(
-      throw new IllegalStateException(
-        "build must not run — the empty artifact is committed"))
-    assert(served2.count() === 0L)
-    assert(served2.schema.fieldNames.toSeq === Seq("lvl", "v"))
-    assert(AnnIndexStore.commits.get() === c0 + 1,
-      "cold serve of the empty artifact re-committed")
+    graft.Util.deleteRecursively(root)
+    try {
+      val c0 = AnnIndexStore.commits.get()
+      val served = AnnIndexStore.serve(spark, "specempty", sf,
+        "specempty.v1", "v")(empty)
+      assert(served.count() === 0L)
+      assert(served.schema.fieldNames.toSeq === Seq("lvl", "v"))
+      assert(AnnIndexStore.commits.get() === c0 + 1)
+      val served2 = AnnIndexStore.serve(spark, "specempty", sf,
+        "specempty.v1", "v")(
+        throw new IllegalStateException(
+          "build must not run — the empty artifact is committed"))
+      assert(served2.count() === 0L)
+      assert(served2.schema.fieldNames.toSeq === Seq("lvl", "v"))
+      assert(AnnIndexStore.commits.get() === c0 + 1,
+        "cold serve of the empty artifact re-committed")
+    } finally graft.Util.deleteRecursively(root)
   }
 
   test("AnnIndexStore: the fingerprint rides in the manifest header — " +
@@ -653,26 +652,25 @@ class SimilaritySpec extends SparkSpec {
     // line is the fp header; (2) readCommitted with a DIFFERENT fp
     // returns None (miss → rebuild), with the same fp returns the rows.
     import org.apache.spark.sql.functions.col
-    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_annidx_spechdr_${graft.Util.pathTag(sf)}")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(root)
-    import spark.implicits._
-    val df = Seq((1L, 10L), (2L, 20L)).toDF("v", "w")
-    val fp = "spechdr-params\nfile-a:1:2"
-    val served = AnnIndexStore.commit(spark, "spechdr", sf, df, "v", fp)
-    assert(served.orderBy(col("v")).collect().map(_.getLong(1)).toSeq
-      === Seq(10L, 20L))
-    val mf = java.nio.file.Paths.get(root.toString, "_graft_log", "v0.txt")
-    val firstLine = java.nio.file.Files.readAllLines(mf).get(0)
-    assert(firstLine === s"#fp_sha256=${graft.Util.sha256Hex(fp)}",
-      s"manifest header is not the fingerprint hash: $firstLine")
-    assert(AnnIndexStore.readCommitted(spark, "spechdr", sf, fp).isDefined)
-    assert(AnnIndexStore.readCommitted(spark, "spechdr", sf,
-      fp + ":changed").isEmpty,
-      "a mismatched fingerprint must MISS, not serve the old artifact")
+    graft.Util.deleteRecursively(root)
+    try {
+      import spark.implicits._
+      val df = Seq((1L, 10L), (2L, 20L)).toDF("v", "w")
+      val fp = "spechdr-params\nfile-a:1:2"
+      val served = AnnIndexStore.commit(spark, "spechdr", sf, df, "v", fp)
+      assert(served.orderBy(col("v")).collect().map(_.getLong(1)).toSeq
+        === Seq(10L, 20L))
+      val mf = root.resolve("_graft_log").resolve("v0.txt")
+      val firstLine = java.nio.file.Files.readAllLines(mf).get(0)
+      assert(firstLine === s"#fp_sha256=${graft.Util.sha256Hex(fp)}",
+        s"manifest header is not the fingerprint hash: $firstLine")
+      assert(AnnIndexStore.readCommitted(spark, "spechdr", sf, fp).isDefined)
+      assert(AnnIndexStore.readCommitted(spark, "spechdr", sf,
+        fp + ":changed").isEmpty,
+        "a mismatched fingerprint must MISS, not serve the old artifact")
+    } finally graft.Util.deleteRecursively(root)
   }
 
   test("embed_rp over an EMPTY embeddings table: empty result, no crash") {

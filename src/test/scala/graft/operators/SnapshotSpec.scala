@@ -224,4 +224,20 @@ class SnapshotSpec extends SparkSpec {
       .count()
     assert(bad === 0L, s"$bad rows lost an update")
   }
+
+  test("an empty events table: every snapshot key returns zero rows " +
+      "with its usual columns (a version listing no files reads with " +
+      "the table's schema, an empty stats list prunes to nothing)") {
+    val dir = testDir("snapshot_empty_").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0)
+      .write.parquet(s"$dir/events.parquet")
+    val cols = Seq("event_id", "user_id", "cents", "event_type")
+    Seq("table_snapshot" -> (cols :+ "version"), "snapshot_expire" -> cols,
+        "snapshot_skipping" -> cols, "snapshot_concurrent" -> cols,
+        "merge_concurrent" -> cols).foreach { case (key, want) =>
+      val df = graft.SparkEntry.queries(key)(spark, dir)
+      assert(df.columns.toSeq === want, key)
+      assert(df.count() === 0L, key)
+    }
+  }
 }

@@ -79,6 +79,40 @@ class TextAnalysisSpec extends SparkSpec {
     assert(nulls === Set((1L, 0L, 0L), (1500L, 0L, 50L)))
   }
 
+  test("Prefix.runningSums equals the one-window running sum on both " +
+      "bucket axes: an empty frame, one bucket, adjacent keys split by " +
+      "a bucket boundary, a NULL group key, two value columns") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // order keys are unique per case, so `k` is a total order with or
+    // without the group partition
+    val cases = Seq(
+      "empty" -> Seq.empty[(Option[String], Long, Long, Long)],
+      "one bucket" -> Seq((Some("a"), 3L, 5L, 1L), (Some("a"), 1L, 7L, 2L),
+        (Some("b"), 2L, 4L, 3L)),
+      "boundary" -> Seq((Some("a"), 9L, 5L, 1L), (Some("a"), 10L, 6L, 2L),
+        (Some("a"), 11L, 1L, 3L), (Some("b"), 19L, 2L, 4L),
+        (Some("a"), 20L, 3L, 5L)),
+      "null group" -> Seq((None, 5L, 1L, 10L), (None, 15L, 2L, 20L),
+        (Some("a"), 6L, 3L, 30L), (None, 25L, 4L, 40L)))
+    for ((name, rows) <- cases; groups <- Seq(Seq("g"), Nil);
+         bounded <- Seq(true, false)) {
+      val df = rows.toDF("g", "k", "v1", "v2")
+        .withColumn("bkt", expr("k DIV 10"))
+      val w = Window.partitionBy(groups.map(col): _*).orderBy("k")
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val want = df.withColumn("c1", sum(col("v1")).over(w))
+        .withColumn("c2", sum(col("v2")).over(w))
+      val got = Prefix.runningSums(df, groups, Seq("bkt"), Seq("k"),
+        Seq("c1" -> col("v1"), "c2" -> col("v2")), bounded)
+      val label = s"$name, groups=$groups, bounded=$bounded"
+      assert(got.columns.toSeq === want.columns.toSeq, label)
+      val g = got.collect().toSeq
+      assert(g.size === rows.size, label)
+      assert(g.toSet === want.collect().toSet, label)
+    }
+  }
+
   test("text_entropy: analytic golden values — uniform alphabets hit " +
       "log2(k) exactly, repetition scores zero") {
     import spark.implicits._
